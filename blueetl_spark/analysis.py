@@ -24,10 +24,12 @@ yields the right columns plugs in.
 from __future__ import annotations
 
 import itertools
+from concurrent.futures import ThreadPoolExecutor
 from functools import cached_property
 from pathlib import Path
 from typing import Any, Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -366,89 +368,142 @@ class Analyzer:
     def calculate_features(self) -> dict[str, DataFrame]:
         """Run every feature config; returns name → DataFrame (with params
         suffix when expanded). Built-in Spark-native features are addressed
-        by ``function: blueetl_spark.features.<name>``."""
-        from blueetl_spark.operators import features as feat
+        by ``function: blueetl_spark.features.<name>``.
 
+        With a cache, tables it cannot serve are materialized in two
+        phases. First every missing table's plan is built on the calling
+        thread (resolving report, windows and neuron classes once). Then
+        every dump + reload runs as a concurrent Spark job from one thread
+        pool, whose jobs carry the caller's job group and description: the
+        feature jobs of a campaign are small, and run one at a time they
+        left most cores idle. Since the tables are materialized as one
+        batch, a failing feature no longer stops the others from being
+        published: its error is raised once every job has finished, the
+        independent tables are already cached (a retry recomputes only what
+        failed), and the failed dump leaves nothing behind. An error while
+        building a plan raises before any job starts. When two configs name
+        the same table, the last one wins.
+        """
         out: dict[str, DataFrame] = {}
+        pending: dict[str, tuple[DataFrame, str]] = {}  # key → (plan, checksum)
         counts = self.neuron_classes.select("circuit_id", "neuron_class", "count")
         for cfg in expand_features_configs(self.config.get("features", [])):
-            fname = cfg["function"]
-            suffix = cfg.get("suffix", "")
-            params = cfg.get("params", {})
             if self._is_multi_feature(cfg):
-                self._features_multi(cfg, counts, out)
+                self._features_multi(cfg, counts, out, pending)
                 continue
-            key = cfg.get("name", fname.rsplit(".", 1)[-1]) + suffix
+            key = cfg.get("name", cfg["function"].rsplit(".", 1)[-1])
+            key += cfg.get("suffix", "")
             # cache first: a hit must not pay for plan construction (which
             # resolves report/windows and opens their inputs)
             cs = checksum({"cfg": cfg}) if self._cache is not None else None
-            name = f"features_{key}"
             if self._cache is not None:
-                hit = self._cache.fetch(name, cs, self.simulations_filter)
+                hit = self._cache.fetch(f"features_{key}", cs, self.simulations_filter)
                 if hit is not None:
                     out[key] = hit
+                    pending.pop(key, None)
                     continue
-            report, windows, fcounts = self._feature_inputs(cfg, counts)
-            if fname == "blueetl_spark.features.by_gid":
-                df = feat.by_gid(report, windows)
-            elif fname == "blueetl_spark.features.by_gid_and_trial":
-                df = feat.by_gid_and_trial(report)
-            elif fname == "blueetl_spark.features.by_neuron_class":
-                df = feat.by_neuron_class(report, windows, fcounts)
-            elif fname == "blueetl_spark.features.by_neuron_class_and_trial":
-                df = feat.by_neuron_class_and_trial(
-                    report, fcounts, windows=windows
-                )
-            elif fname == "blueetl_spark.features.histogram":
-                df = feat.histogram(
-                    report, windows, fcounts,
-                    bin_size=float(params.get("bin_size", 1.0)),
-                )
-            elif fname == "blueetl_spark.features.isi_stats":
-                df = feat.isi_stats(report)
-            elif fname == "blueetl_spark.features.latency":
-                df = feat.latency(report, windows)
-            elif fname == "blueetl_spark.features.sessionize":
-                from blueetl_spark.operators import timeseries as ts
-
-                df = ts.sessionize(
-                    report,
-                    gap=float(params["gap"]),
-                    by=params.get("by", ["simulation_id", "window", "gid"]),
-                )
-            elif fname == "blueetl_spark.features.quantiles":
-                from blueetl_spark.operators import timeseries as ts
-
-                df = ts.group_quantiles(
-                    report,
-                    params.get("value_col", "time"),
-                    params.get("by", ["simulation_id", "window", "neuron_class"]),
-                    probs=tuple(params.get("probs", (0.5, 0.9, 0.99))),
-                    exact=bool(params.get("exact", True)),
-                )
-            else:
-                # registry lookup → applyInPandas UDTF path (§2.9);
-                # reference-shaped fns additionally get the repo shim
-                fn_ = feat.get_feature(fname)
-                df = feat.apply_feature(
-                    report,
-                    cfg.get("groupby", feat.GROUP_KEYS),
-                    fn_,
-                    cfg["schema"],
-                    params=params,
-                    repo=(
-                        self._compat_repo()
-                        if feat._is_reference_shaped(fn_)
-                        else None
-                    ),
-                )
-            if params and cfg.get("params_id") is not None:
-                df = df.withColumn("params_id", F.lit(cfg["params_id"]))
-            if self._cache is not None:
-                self._cache.dump(name, df, cs, self.simulations_filter)
-                df = self._cache.load(name)
-            out[key] = df
+            self._stage(key, self._feature_plan(cfg, counts), cfg, cs, out, pending)
+        self._materialize(pending, out)
         return out
+
+    def _feature_plan(self, cfg: dict[str, Any], counts: DataFrame) -> DataFrame:
+        """The (unexecuted) DataFrame of one single-output feature config."""
+        from blueetl_spark.operators import features as feat
+
+        fname = cfg["function"]
+        params = cfg.get("params", {})
+        report, windows, fcounts = self._feature_inputs(cfg, counts)
+        if fname == "blueetl_spark.features.by_gid":
+            return feat.by_gid(report, windows)
+        if fname == "blueetl_spark.features.by_gid_and_trial":
+            return feat.by_gid_and_trial(report)
+        if fname == "blueetl_spark.features.by_neuron_class":
+            return feat.by_neuron_class(report, windows, fcounts)
+        if fname == "blueetl_spark.features.by_neuron_class_and_trial":
+            return feat.by_neuron_class_and_trial(report, fcounts, windows=windows)
+        if fname == "blueetl_spark.features.histogram":
+            return feat.histogram(
+                report, windows, fcounts,
+                bin_size=float(params.get("bin_size", 1.0)),
+            )
+        if fname == "blueetl_spark.features.isi_stats":
+            return feat.isi_stats(report)
+        if fname == "blueetl_spark.features.latency":
+            return feat.latency(report, windows)
+        if fname == "blueetl_spark.features.sessionize":
+            from blueetl_spark.operators import timeseries as ts
+
+            return ts.sessionize(
+                report,
+                gap=float(params["gap"]),
+                by=params.get("by", ["simulation_id", "window", "gid"]),
+            )
+        if fname == "blueetl_spark.features.quantiles":
+            from blueetl_spark.operators import timeseries as ts
+
+            return ts.group_quantiles(
+                report,
+                params.get("value_col", "time"),
+                params.get("by", ["simulation_id", "window", "neuron_class"]),
+                probs=tuple(params.get("probs", (0.5, 0.9, 0.99))),
+                exact=bool(params.get("exact", True)),
+            )
+        # registry lookup → applyInPandas UDTF path (§2.9);
+        # reference-shaped fns additionally get the repo shim
+        fn_ = feat.get_feature(fname)
+        return feat.apply_feature(
+            report,
+            cfg.get("groupby", feat.GROUP_KEYS),
+            fn_,
+            cfg["schema"],
+            params=params,
+            repo=self._compat_repo() if feat._is_reference_shaped(fn_) else None,
+        )
+
+    def _stage(
+        self,
+        key: str,
+        df: DataFrame,
+        cfg: dict[str, Any],
+        cs: str | None,
+        out: dict[str, DataFrame],
+        pending: dict[str, tuple[DataFrame, str]],
+    ) -> None:
+        """Record a computed feature table: returned as is without a cache,
+        else queued for :meth:`_materialize` (a later config with the same
+        key replaces it)."""
+        if cfg.get("params") and cfg.get("params_id") is not None:
+            df = df.withColumn("params_id", F.lit(cfg["params_id"]))
+        out[key] = df
+        if self._cache is not None:
+            pending[key] = (df, cs)
+
+    def _materialize(
+        self,
+        pending: dict[str, tuple[DataFrame, str]],
+        out: dict[str, DataFrame],
+    ) -> None:
+        """Dump and reload every pending feature table, as concurrent Spark
+        jobs; raises the first failure (in config order) once all are done."""
+        if not pending:
+            return
+        cache, flt = self._cache, self.simulations_filter
+
+        @inheritable_thread_target(self.spark)  # captures the job group now
+        def publish(key: str) -> DataFrame:
+            df, cs = pending[key]
+            cache.dump(f"features_{key}", df, cs, flt)
+            return cache.load(f"features_{key}")
+
+        workers = min(len(pending), self.spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(workers) as pool:  # exits when all are done
+            futures = {key: pool.submit(publish, key) for key in pending}
+        for key, fut in futures.items():
+            err = fut.exception()
+            if err is not None:
+                err.add_note(f"while materializing feature table {key!r}")
+                raise err
+            out[key] = fut.result()
 
     # -- multi-output (reference `type: multi`) features ---------------------
     @staticmethod
@@ -484,7 +539,11 @@ class Analyzer:
         return self._compat_repo_cache
 
     def _features_multi(
-        self, cfg: dict[str, Any], counts: DataFrame, out: dict[str, DataFrame]
+        self,
+        cfg: dict[str, Any],
+        counts: DataFrame,
+        out: dict[str, DataFrame],
+        pending: dict[str, tuple[DataFrame, str]],
     ) -> None:
         """One multi-output feature config → one output table per name.
 
@@ -522,7 +581,9 @@ class Analyzer:
                 for n in names
             }
             if all(v is not None for v in hits.values()):
-                out.update({f"{n}{suffix}": v for n, v in hits.items()})
+                for n, v in hits.items():
+                    out[f"{n}{suffix}"] = v
+                    pending.pop(f"{n}{suffix}", None)
                 return
         report, windows, counts = self._feature_inputs(cfg, counts)
         if builder is not None:
@@ -541,14 +602,7 @@ class Analyzer:
                 ),
             )
         for oname, df in produced.items():
-            okey = f"{oname}{suffix}"
-            if params and cfg.get("params_id") is not None:
-                df = df.withColumn("params_id", F.lit(cfg["params_id"]))
-            if self._cache is not None:
-                name = f"features_{okey}"
-                self._cache.dump(name, df, cs, self.simulations_filter)
-                df = self._cache.load(name)
-            out[okey] = df
+            self._stage(f"{oname}{suffix}", df, cfg, cs, out, pending)
 
     # -- in-memory refiltering (reference apply_filter) ----------------------
     def apply_filter(self, simulations_filter: Query = None):

@@ -26,6 +26,7 @@ from blueetl_spark.operators.text import (
     shingles,
     winnowing_fingerprints,
 )
+from blueetl_spark.session import shuffle_partitions
 
 
 def dedup_exact(
@@ -1129,7 +1130,7 @@ def connected_components(
         # graph.pagerank's edge cache). One extra edge-sized exchange
         # at build, amortized over up to ``max_iter`` rounds.
         spark = pairs.sparkSession
-        nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        nparts = shuffle_partitions(spark)
         edges_l = (
             edges.repartition(nparts, "src")
             .sortWithinPartitions("src")

@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from blueetl_spark.session import shuffle_partitions
+
 
 def pagerank(
     edges: DataFrame,
@@ -158,7 +160,7 @@ def pagerank(
         # Explicit numPartitions: AQE must not coalesce the layout or
         # the per-round co-partitioning match is lost.
         spark = edges.sparkSession
-        nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        nparts = shuffle_partitions(spark)
         we = (
             we.repartition(nparts, "src")
             .sortWithinPartitions("src")
@@ -615,7 +617,7 @@ def bfs_hops(
     )
     if use_layout:
         spark = edges.sparkSession
-        nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        nparts = shuffle_partitions(spark)
         adj = (
             adj.repartition(nparts, "src")
             .sortWithinPartitions("src")
@@ -741,7 +743,7 @@ def shortest_paths(
     )
     if use_layout:
         spark = edges.sparkSession
-        nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        nparts = shuffle_partitions(spark)
         adj = (
             adj.repartition(nparts, "src")
             .sortWithinPartitions("src")

@@ -19,6 +19,14 @@ Differences by design (SURVEY §7 hard-parts):
 - Checksums are over the *config*, not file bytes: Spark inputs are
   immutable-by-convention parquet datasets; add explicit ``version`` salt
   to configs to force invalidation.
+- The metadata sidecar also carries the dumped frame's schema, and
+  ``load`` hands it to the reader: reopening a cached table starts no
+  parquet schema-inference job (meta written without a schema still loads,
+  by inference).
+- A coordinate subfilter resolved against the cached simulations table is
+  memoized per (filter, id column), so fetching N feature tables through
+  one subfilter collects the surviving ids once; dumping or deleting
+  ``simulations`` clears the memo.
 """
 
 from __future__ import annotations
@@ -33,6 +41,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from blueetl_spark.functions.qdsl import Query, compile_query, is_subfilter
 
@@ -68,13 +77,16 @@ class CacheManager:
     """Parquet + JSON-metadata cache for named DataFrames.
 
     Layout: ``<path>/<name>.parquet/`` (directory dataset) and
-    ``<path>/<name>.meta.json`` with ``{"checksum", "filter", "written_at"}``.
+    ``<path>/<name>.meta.json`` with ``{"checksum", "filter", "written_at",
+    "schema"}``.
     """
 
     def __init__(self, spark: SparkSession, path: str | Path, readonly: bool = False):
         self.spark = spark
         self.path = Path(path)
         self.readonly = readonly
+        # (simulations written_at, filter checksum, id column) -> ids
+        self._resolved: dict[tuple[Any, str, str], list[Any]] = {}
         if not readonly:
             self.path.mkdir(parents=True, exist_ok=True)
 
@@ -102,7 +114,11 @@ class CacheManager:
         )
 
     def load(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(str(self._data_path(name)))
+        reader = self.spark.read
+        schema = (self.get_meta(name) or {}).get("schema")
+        if schema is not None:  # pinned: no schema-inference job
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(str(self._data_path(name)))
 
     def dump(
         self,
@@ -122,7 +138,11 @@ class CacheManager:
         for stale in self.path.glob(f".{name}.parquet.old-*"):
             shutil.rmtree(stale, ignore_errors=True)
         tmp = self.path / f".{name}.parquet.tmp-{os.getpid()}"
-        df.write.mode("overwrite").parquet(str(tmp))
+        try:
+            df.write.mode("overwrite").parquet(str(tmp))
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
         # Publish without a missing-path window: move the old dataset aside
         # (atomic), swap the new one in (atomic), then delete the old copy.
         old = self.path / f".{name}.parquet.old-{os.getpid()}"
@@ -136,7 +156,10 @@ class CacheManager:
             "checksum": config_checksum,
             "filter": simulations_filter,
             "written_at": time.time(),
+            "schema": df.schema.jsonValue(),
         }
+        if name == "simulations":
+            self._resolved.clear()
         tmp_meta = self.path / f".{name}.meta.tmp-{os.getpid()}"
         tmp_meta.write_text(json.dumps(meta, indent=1, default=str))
         os.replace(tmp_meta, self._meta_path(name))
@@ -144,6 +167,8 @@ class CacheManager:
     def delete(self, name: str) -> None:
         if self.readonly:
             raise PermissionError(f"cache at {self.path} is readonly")
+        if name == "simulations":
+            self._resolved.clear()
         data = self._data_path(name)
         if data.exists():
             shutil.rmtree(data)
@@ -219,21 +244,27 @@ class CacheManager:
         Applies ``requested`` to the cached simulations table (where campaign
         coordinate columns live) and returns ``(id_column, ids)`` to filter
         the frame with. The id set is campaign-sized (tens to thousands), so
-        an ``isin`` literal keeps the refilter pushdown-friendly. Returns
+        an ``isin`` literal keeps the refilter pushdown-friendly; it is
+        collected once per (simulations dump, filter, id column). Returns
         None when resolution is unsound/impossible.
         """
-        sims_path = self._data_path("simulations")
-        if not sims_path.exists():
+        meta = self.get_meta("simulations")
+        if meta is None or not self._data_path("simulations").exists():
             return None
-        sims = self.spark.read.parquet(str(sims_path))
+        sims = self.load("simulations")
         if not _query_keys(requested) <= set(sims.columns):
             return None
         keys = [c for c in filter_columns if c in sims.columns and c in frame_columns]
         if not keys:
             return None
         key = keys[0]
-        rows = sims.filter(compile_query(requested)).select(key).distinct().collect()
-        return key, [r[0] for r in rows]
+        memo = (meta["written_at"], checksum(requested), key)
+        if memo not in self._resolved:
+            rows = (
+                sims.filter(compile_query(requested)).select(key).distinct().collect()
+            )
+            self._resolved[memo] = [r[0] for r in rows]
+        return key, self._resolved[memo]
 
 
 class CachedPipeline:
@@ -267,4 +298,10 @@ class CachedPipeline:
             return hit
         df = compute()
         self.cache.dump(name, df, cs, self.simulations_filter)
-        return self.cache.load(name)
+        loaded = self.cache.load(name)
+        # driver-side facts stashed on the computed frame (the windows
+        # table's ``_blueetl_time_bounds``) hold for its reload too
+        for attr, value in vars(df).items():
+            if attr.startswith("_blueetl_"):
+                setattr(loaded, attr, value)
+        return loaded

@@ -63,6 +63,16 @@ def get_spark(
     return spark
 
 
+def shuffle_partitions(spark: SparkSession) -> int:
+    """``spark.sql.shuffle.partitions`` as a partition count for an explicit
+    ``repartition``. A cluster may set it to a non-numeric value (e.g.
+    ``"auto"``); then the default parallelism stands in."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
+
+
 def local_df(spark: SparkSession, rows, ddl: str):
     """Small driver-side DataFrame via the pandas/Arrow path.
 

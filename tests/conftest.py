@@ -19,6 +19,26 @@ def spark():
     yield spark
 
 
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> ``(fn(), number of Spark jobs it started)``,
+    counted through a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

@@ -15,6 +15,7 @@ from blueetl_spark.analysis import (
     params_zip,
     run_from_config,
 )
+from blueetl_spark.operators import features as feat
 
 CONFIG = {
     "version": 4,
@@ -322,3 +323,179 @@ def test_config_names_feature_function_by_module_path(
     # cross-check against the report itself
     total = got.n_scaled.sum() / 10
     assert total == a.report.count()
+
+
+def _register_test_features() -> None:
+    """Defined inside a function, so the Python workers get them by value
+    (this test module is not importable there)."""
+
+    @feat.register_feature("test_analysis_spike_count")
+    def spike_count(g: pd.DataFrame, params: dict) -> pd.DataFrame:
+        return pd.DataFrame({"n_spikes": [len(g)]})
+
+    @feat.register_feature("test_analysis_fails")
+    def fails(g: pd.DataFrame, params: dict) -> pd.DataFrame:
+        raise RuntimeError("feature exploded")
+
+
+_register_test_features()
+
+
+SPIKE_COUNT = {
+    "function": "test_analysis_spike_count",
+    "schema": "simulation_id smallint, circuit_id smallint, "
+    "neuron_class string, window string, n_spikes long",
+}
+BUILTINS = [
+    {"function": "blueetl_spark.features.isi_stats"},
+    {"function": "blueetl_spark.features.histogram", "params": {"bin_size": 5.0}},
+    {"function": "blueetl_spark.features.latency"},
+]
+# reference-style multi feature: by_gid, by_gid_and_trial (array column
+# ``times``), by_neuron_class, by_neuron_class_and_trial, histograms
+BNAC_MULTI = {
+    "type": "multi",
+    "function": "blueetl_spark.compat.bnac.calculate_features.calculate_features_multi",
+    "params": {"export_all_neurons": True},
+}
+
+
+def _with_features(features: list[dict], **top) -> dict:
+    import copy
+
+    cfg = copy.deepcopy(CONFIG)
+    cfg["analysis"]["spikes"]["features"] = copy.deepcopy(features)
+    return {**cfg, **top}
+
+
+def _canon(df: pd.DataFrame) -> pd.DataFrame:
+    """Columns and rows in a fixed order; list cells as tuples."""
+    df = df[sorted(df.columns)].copy()
+    for c in df.columns:
+        if df[c].map(lambda v: isinstance(v, (list, np.ndarray))).any():
+            df[c] = df[c].map(tuple)
+    return df.sort_values(list(df.columns), ignore_index=True)
+
+
+def _assert_same_tables(got: dict, exp: dict) -> None:
+    assert set(got) == set(exp)
+    for name in exp:
+        assert got[name].schema.simpleString() == exp[name].schema.simpleString(), name
+        pd.testing.assert_frame_equal(
+            _canon(got[name].toPandas()), _canon(exp[name].toPandas()),
+            check_dtype=False,
+        )
+
+
+@pytest.fixture(scope="module")
+def cold_cached(spark, data, tmp_path_factory):
+    """(uncached features, cold cached features, cache dir) of one config
+    with a multi feature, built-ins and an ``applyInPandas`` feature."""
+    nodes, events = data
+    cfg = _with_features([BNAC_MULTI, *BUILTINS, SPIKE_COUNT])
+    cache = tmp_path_factory.mktemp("cold") / "c"
+    uncached = MultiAnalyzer(spark, cfg, nodes, events).spikes.calculate_features()
+    cached = MultiAnalyzer(
+        spark, cfg, nodes, events, cache_path=cache
+    ).spikes.calculate_features()
+    return uncached, cached, cache / "spikes"
+
+
+def test_cold_cached_features_equal_uncached(cold_cached):
+    uncached, cached, _ = cold_cached
+    assert len(cached) == 9
+    _assert_same_tables(cached, uncached)
+
+
+def test_cached_tables_load_with_the_inferred_schema(spark, cold_cached):
+    """The schema pinned at dump time is exactly what inference reads back,
+    for every table of a cold run (array columns included)."""
+    from blueetl_spark.plans.cache import CacheManager
+
+    _, cached, cache_dir = cold_cached
+    cache = CacheManager(spark, cache_dir, readonly=True)
+    names = [p.name[: -len(".meta.json")] for p in cache_dir.glob("*.meta.json")]
+    assert {"simulations", "report", "features_by_gid_and_trial"} <= set(names)
+    times = cache.load("features_by_gid_and_trial").schema["times"]
+    assert times.dataType.typeName() == "array"
+    for name in names:
+        inferred = spark.read.parquet(str(cache_dir / f"{name}.parquet"))
+        assert cache.load(name).schema == inferred.schema, name
+
+
+def test_failing_feature_raises_after_the_others_finish(spark, data, tmp_path):
+    nodes, events = data
+    cfg = _with_features([{**SPIKE_COUNT, "function": "test_analysis_fails",
+                           "name": "broken"}, *BUILTINS, SPIKE_COUNT])
+    a = MultiAnalyzer(spark, cfg, nodes, events, cache_path=tmp_path / "c").spikes
+    a.extract()
+    with pytest.raises(Exception, match="feature exploded"):
+        a.calculate_features()
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    cache_dir = tmp_path / "c" / "spikes"
+    assert not [p.name for p in cache_dir.iterdir() if p.name.startswith(".")]
+    assert not (cache_dir / "features_broken.meta.json").exists()
+    # the independent tables were published and serve the next run
+    for key in ("isi_stats", "histogram", "latency", "test_analysis_spike_count"):
+        assert (cache_dir / f"features_{key}.meta.json").exists(), key
+
+
+def test_same_feature_key_last_config_wins(spark, data, tmp_path):
+    nodes, events = data
+    cfg = _with_features([
+        {"function": "blueetl_spark.features.by_gid", "name": "dup"},
+        {"function": "blueetl_spark.features.by_neuron_class", "name": "dup"},
+    ])
+    uncached = MultiAnalyzer(spark, cfg, nodes, events).spikes.calculate_features()
+    assert "mean_of_mean_firing_rates_per_second" in uncached["dup"].columns
+    for _ in ("cold", "warm"):
+        cached = MultiAnalyzer(
+            spark, cfg, nodes, events, cache_path=tmp_path / "c"
+        ).spikes.calculate_features()
+        _assert_same_tables(cached, uncached)
+
+
+def test_feature_jobs_carry_the_callers_job_group(spark, data, tmp_path, count_jobs):
+    nodes, events = data
+    cfg = _with_features([*BUILTINS, SPIKE_COUNT])
+    a = MultiAnalyzer(spark, cfg, nodes, events, cache_path=tmp_path / "c").spikes
+    a.extract()
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    feats, jobs = count_jobs(a.calculate_features)
+    assert jobs >= len(feats) == 4
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
+def test_cold_cached_windows_keep_time_bounds(spark, data, tmp_path, count_jobs):
+    from blueetl_spark.operators.windows import time_bounds_filter
+
+    nodes, events = data
+    a = MultiAnalyzer(spark, CONFIG, nodes, events, cache_path=tmp_path / "c").spikes
+    windows = a.windows
+    _, jobs = count_jobs(lambda: time_bounds_filter(windows))
+    assert jobs == 0
+
+
+def test_warm_requery_jobs_do_not_grow_with_features(spark, data, tmp_path, count_jobs):
+    """Job budget of a re-query through a coordinate subfilter: the
+    surviving ids are resolved once, whatever the number of features."""
+    nodes, events = data
+    features = [
+        {"function": "blueetl_spark.features.by_gid"},
+        {"function": "blueetl_spark.features.by_neuron_class"},
+        *BUILTINS,
+    ]
+    jobs = {}
+    for n in (2, 5):
+        cache = tmp_path / str(n)
+        run_from_config(spark, _with_features(features[:n]), nodes, events,
+                        cache_path=cache)
+        requery = MultiAnalyzer(
+            spark, _with_features(features[:n], simulations_filter={"seed": 2}),
+            nodes, events, cache_path=cache,
+        ).spikes
+        feats, jobs[n] = count_jobs(requery.calculate_features)
+        assert len(feats) == n
+        assert set(feats["by_gid"].toPandas().simulation_id) == {1}
+    assert jobs[2] == jobs[5]

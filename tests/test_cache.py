@@ -114,3 +114,85 @@ def test_pipeline_get_or_compute_counts(spark, tmp_path):
     assert "simulations" in victims
     assert pipe2.get_or_compute("simulations", compute).count() == 2
     assert len(calls) == 2
+
+
+def test_load_pins_dumped_schema(spark, cache, count_jobs):
+    """The meta sidecar carries the schema, so reopening a table starts no
+    schema-inference job and yields what inference would (array columns
+    and nullability included)."""
+    df = spark.createDataFrame(
+        [(1, [0.5, 1.5], "a"), (2, [], None)],
+        "simulation_id int, times array<double>, tag string",
+    )
+    cache.dump("features_t", df, checksum({}))
+    assert "schema" in cache.get_meta("features_t")
+    loaded, jobs = count_jobs(lambda: cache.load("features_t"))
+    assert jobs == 0
+    inferred = spark.read.parquet(str(cache.path / "features_t.parquet"))
+    assert loaded.schema == inferred.schema
+    assert sorted(map(tuple, loaded.collect())) == sorted(map(tuple, df.collect()))
+
+
+def test_meta_without_schema_still_loads(spark, cache):
+    """Meta written before schemas were recorded falls back to inference."""
+    import json
+
+    cache.dump("simulations", _df(spark, [1, 2]), checksum({}))
+    meta_path = cache.path / "simulations.meta.json"
+    meta = json.loads(meta_path.read_text())
+    del meta["schema"]
+    meta_path.write_text(json.dumps(meta))
+    got = cache.load("simulations")
+    assert got.schema.simpleString() == "struct<simulation_id:int,v:double>"
+    assert sorted(r.simulation_id for r in got.collect()) == [1, 2]
+
+
+def test_coordinate_resolution_is_memoized_until_simulations_redump(
+    spark, cache, count_jobs
+):
+    """One subfilter resolves against simulations once for any number of
+    frames; re-dumping simulations forgets the resolved ids."""
+    cs = checksum({"a": 1})
+    sims = spark.createDataFrame(
+        [(1, 0.1), (2, 0.1), (3, 0.2)], "simulation_id int, seed double"
+    )
+    cache.dump("simulations", sims, cs, simulations_filter={})
+    for name in ("features_a", "features_b"):
+        cache.dump(name, _df(spark, [1, 2, 3]), cs, simulations_filter={})
+    _, jobs_first = count_jobs(lambda: cache.fetch("features_a", cs, {"seed": 0.1}))
+    second, jobs_second = count_jobs(
+        lambda: cache.fetch("features_b", cs, {"seed": 0.1})
+    )
+    assert jobs_first > 0 and jobs_second == 0
+    assert sorted(r.simulation_id for r in second.collect()) == [1, 2]
+
+    sims2 = spark.createDataFrame(
+        [(1, 0.2), (2, 0.1), (3, 0.1)], "simulation_id int, seed double"
+    )
+    cache.dump("simulations", sims2, cs, simulations_filter={})
+    got = cache.fetch("features_b", cs, {"seed": 0.1})
+    assert sorted(r.simulation_id for r in got.collect()) == [2, 3]
+
+
+def test_failed_dump_leaves_no_residue(spark, cache):
+    from pyspark.sql import functions as F
+
+    bad = _df(spark, [1, 2]).withColumn(
+        "v", F.raise_error(F.lit("boom")).cast("double")
+    )
+    with pytest.raises(Exception, match="boom"):
+        cache.dump("features_bad", bad, checksum({}))
+    assert [p.name for p in cache.path.iterdir()] == []
+
+
+def test_get_or_compute_carries_driver_side_attributes(spark, tmp_path):
+    """Facts stashed on the computed frame (windows' time bounds) survive
+    the dump + reload of a cold cached step."""
+    pipe = CachedPipeline(CacheManager(spark, tmp_path / "c"), {"windows": {}})
+
+    def compute():
+        df = _df(spark, [1])
+        df._blueetl_time_bounds = (0.0, 5.0)
+        return df
+
+    assert pipe.get_or_compute("windows", compute)._blueetl_time_bounds == (0.0, 5.0)
