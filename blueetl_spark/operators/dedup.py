@@ -21,12 +21,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from blueetl_spark.operators.graph import laid_out
 from blueetl_spark.operators.text import (
     fingerprint,
     shingles,
     winnowing_fingerprints,
 )
-from blueetl_spark.session import shuffle_partitions
 
 
 def dedup_exact(
@@ -1019,7 +1019,6 @@ def connected_components(
     assume_distinct_pairs: bool = False,
     max_driver_edges: int = 1_000_000,
     broadcast_max_labels: int = 4_000_000,
-    edge_cache: bool | None = None,
 ) -> DataFrame:
     """Duplicate clusters from candidate pairs: (id, component) where the
     component label is the smallest id reachable through the pair graph.
@@ -1062,13 +1061,23 @@ def connected_components(
     redundant min-agg input, they never change the result, but the
     skipped ``distinct`` is one full shuffle of the edge list.
 
-    ``broadcast_max_labels`` (r13): when the node-sized label frame
-    fits a broadcast (row count ≤ this bound, decided once — labels
-    only re-point across rounds, they never appear or vanish), each
+    Join rule, decided once from the label frame's row count (constant
+    across rounds — labels only re-point, they never appear or vanish):
+    at most ``broadcast_max_labels`` labels are broadcast, so each
     round's propagate join streams the symmetrized edge list MAP-ONLY
     and the pointer-jump self-join loses both exchanges; only the
-    min-aggregate shuffles. ``min`` is order-exact, so the result is
+    min-aggregate shuffles. Above the bound the edge list is
+    ``graph.laid_out`` on ``src`` once, so each round exchanges and
+    sorts only the label side. ``min`` is order-exact, so the result is
     bit-identical either way. Set 0 to force the shuffled shape.
+
+    The evidence for that layout is weaker than for the graph
+    operators. In the matched-calib A/B at 20M edges against a shuffled
+    edge list without the layout (``plans/r14/edgecache_ab_20m.json``),
+    the medians tied (33.72 s vs 33.73 s) and only the floors favoured
+    it (25.6 s vs 31.8 s, 0.80×), under bursty co-tenant load. It is
+    kept so that every iterative operator follows one rule; a
+    quiet-host re-measurement could still overturn it.
     """
     import gc
 
@@ -1111,32 +1120,12 @@ def connected_components(
     summable = id_type in ("tinyint", "smallint", "int", "bigint") or (
         id_type.startswith("decimal")
     )
-    # join-strategy choice (r13, same contract as graph.pagerank's
-    # broadcast_ranks): the label frame is node-sized and its row count
-    # is CONSTANT across rounds (labels only re-point, never appear or
-    # vanish), so ONE count on the already-pinned frame decides every
-    # round. When it fits a broadcast, the propagate join streams the
-    # EDGE list map-only and the jump self-join loses both exchanges —
-    # the only per-round shuffle left is the min-aggregate. min() is
-    # order-exact, so the strategy cannot change a single label. Past
-    # the bound (corpus-scale vertex sets) the shuffled shape runs.
+    # one count on the already-pinned label frame decides every round
+    # (see the docstring's join rule)
     bc_labels = labels.count() <= max(0, broadcast_max_labels)
-    if not bc_labels and (edge_cache if edge_cache is not None else True):
-        # Shuffled regime (corpus-scale label frame): re-lay the
-        # symmetrized edge cache out ONCE — hash-partitioned on the
-        # propagate join key, sorted, persisted — so each round's
-        # propagate join exchanges/sorts only the node-sized label side
-        # instead of the edge list (VERDICT r13 #4; same contract as
-        # graph.pagerank's edge cache). One extra edge-sized exchange
-        # at build, amortized over up to ``max_iter`` rounds.
-        spark = pairs.sparkSession
-        nparts = shuffle_partitions(spark)
-        edges_l = (
-            edges.repartition(nparts, "src")
-            .sortWithinPartitions("src")
-            .persist()
-        )
-        edges_l.count()  # materialize from the cached edges, one pass
+    if not bc_labels:
+        # built from the cached edges in one pass, which it replaces
+        edges_l = laid_out(edges, "src")
         edges.unpersist(blocking=False)
         edges = edges_l
     prev_sum = None

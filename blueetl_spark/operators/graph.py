@@ -9,12 +9,16 @@ graph code; the companion operator here is ``operators/dedup.py``'s
 Scale design (the shape a 1000-executor run needs):
 
 - The edge list is the big input; it is cleaned ONCE (self-loops out,
-  optional dedup), extended with per-source degree ONCE, and persisted —
-  every iteration re-reads that cached frame. When the vertex set fits
-  a broadcast (node-count gated, ``broadcast_max_nodes``), the round is
-  MAP-ONLY on the edge side: ranks broadcast to the edges and the only
-  shuffle is the map-side-combined ``groupBy(dst)`` partials. Above the
-  bound, ranks are shuffled to the edges (the web-scale fallback).
+  optional dedup), extended with per-source degree ONCE, and pinned —
+  every iteration re-reads that frame.
+- One join rule for every iterative operator here (and
+  ``dedup.connected_components``), decided from a row count the
+  operator already takes: when the node-sized side (ranks, frontier,
+  distances, survivors, labels) has at most ``broadcast_max_nodes``
+  rows it is broadcast and the round is MAP-ONLY on the edge side;
+  otherwise the edge frame is laid out once by :func:`laid_out` and
+  each round shuffles only the node-sized side. The layout is released
+  before the operator returns.
 - Dangling mass (nodes with no out-links) is handled exactly: the
   dangling node SET is computed once (anti join); each round folds their
   current rank into a single scalar (one map-side-combined agg) and
@@ -43,6 +47,31 @@ from pyspark.sql import functions as F
 from blueetl_spark.session import shuffle_partitions
 
 
+def laid_out(edges: DataFrame, key: str) -> DataFrame:
+    """``edges`` hash-partitioned on ``key``, sorted within partitions,
+    persisted and materialized (one ``count``) — the edge side of an
+    iterative operator whose node-sized side is too big to broadcast.
+    The caller unpersists it before returning.
+
+    A localCheckpoint loses partitioning metadata, so a pinned edge
+    frame would be re-exchanged AND re-sorted by every round's
+    sort-merge join. An InMemoryTableScan keeps its outputPartitioning
+    and ordering (``spark.sql.optimizer.canChangeCachedPlanOutput-
+    Partitioning`` defaults false), so each round exchanges and sorts
+    only the node-sized side. The partition count is explicit because
+    AQE must not coalesce the layout: a coalesced layout no longer
+    matches the per-round exchange, and the edge side is shuffled again.
+    """
+    spark = edges.sparkSession
+    out = (
+        edges.repartition(shuffle_partitions(spark), key)
+        .sortWithinPartitions(key)
+        .persist()
+    )
+    out.count()
+    return out
+
+
 def pagerank(
     edges: DataFrame,
     src_col: str = "src",
@@ -55,10 +84,7 @@ def pagerank(
     assume_distinct_edges: bool = False,
     personalization: DataFrame | None = None,
     weight_col: str = "weight",
-    checkpoint_interval: int = 1,
-    broadcast_ranks: bool | None = None,
     broadcast_max_nodes: int = 4_000_000,
-    edge_cache: bool | None = None,
 ) -> DataFrame:
     """Exact (matrix-free) PageRank over a directed edge list.
 
@@ -68,34 +94,20 @@ def pagerank(
     the L1-delta stop threshold; set ``tol=0.0`` to force exactly
     ``max_iter`` rounds (reproducible iteration counts for tests).
     ``assume_distinct_edges=True`` skips the edge-dedup shuffle, same
-    contract as ``connected_components``.
+    contract as ``connected_components``. Every round ends in an eager
+    localCheckpoint: each round's rank frame is referenced three times
+    (dangling mass, contributions, carry), so an uncut lineage triples
+    per round.
 
-    ``checkpoint_interval`` controls how often the iterative lineage is
-    cut with an eager localCheckpoint: 1 (default) materializes every
-    round — the safe choice for big graphs, bounding any recompute to
-    one round; k>1 folds k rounds into one job, trading k× fewer job
-    submissions (the dominant cost on small graphs / fixed-iteration
-    gates) against plan growth — each unpinned round's rank frame is
-    referenced THREE times (dangling mass, contributions, carry), so
-    the plan triples per unpinned round; keep k ≤ 2-3. Ignored (pinned
-    every round) when ``tol > 0``, whose delta job forces per-round
-    materialization anyway.
-
-    ``broadcast_ranks`` picks the per-iteration join strategy.
-    ``None`` (default) decides from the measured vertex count ``n``
-    (already computed for the teleport base): when the node-sized rank
-    frame fits a broadcast (``n <= broadcast_max_nodes``, ~100 MB at
-    the default bound) every round becomes MAP-ONLY on the edge side —
-    the big weighted-edge frame is never exchanged or sorted; the only
-    shuffle left per round is the map-side-combined partial rows of
-    ``groupBy(dst)``, and the node-sized contribution/teleport joins
-    broadcast too. Above the bound (web-scale graphs whose vertex set
-    itself is too big to broadcast) the weighted-edge frame is laid
-    out ONCE — hash-partitioned on ``src``, sorted within partitions,
-    persisted — so each round's sort-merge join exchanges and sorts
-    only the node-sized rank side (``edge_cache``: ``None``/``True``
-    use that layout on the shuffled path, ``False`` keeps the legacy
-    per-round-exchange shape as a measurement control). Float note:
+    Join rule, from the vertex count ``n`` (already computed for the
+    teleport base): when ``n <= broadcast_max_nodes`` (~100 MB of ranks
+    at the default bound) the rank frame is broadcast and every round
+    is MAP-ONLY on the edge side — the only shuffle left is the
+    map-side-combined partial rows of ``groupBy(dst)``, and the
+    node-sized contribution/teleport joins broadcast too. Above the
+    bound the weighted-edge frame is :func:`laid_out` on ``src`` once,
+    so each round's sort-merge join exchanges and sorts only the
+    node-sized rank side. Float note:
     the broadcast shape accumulates each dst's contributions in edge-
     partition order rather than sorted-src order, so raw ranks move at
     the ~1e-15 relative level — inside every consumer's contract (the
@@ -135,38 +147,13 @@ def pagerank(
     if n == 0:
         return ids.withColumn("rank", F.lit(0.0))
 
-    bc = broadcast_ranks if broadcast_ranks is not None else (
-        n <= broadcast_max_nodes
-    )
+    bc = n <= broadcast_max_nodes
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
-    # weight each edge once; every iteration reuses this cached frame
+    # weight each edge once; every iteration reuses this pinned frame
     we = e.join(deg, "src").select(
         "src", "dst", (F.lit(1.0) / F.col("__deg")).alias("w")
     )
-    use_layout = (not bc) and (edge_cache if edge_cache is not None else True)
-    if not use_layout:
-        we = we.localCheckpoint()
-    else:
-        # Above the broadcast bound every round joins ranks to this
-        # edge frame on src. A localCheckpoint loses partitioning
-        # metadata, so each of the max_iter rounds re-exchanges AND
-        # re-sorts the EDGE-SIZED side — the structural scale-killer
-        # VERDICT r13 #4 flagged. Lay the frame out once instead:
-        # hash-partition by the join key, sort within partitions, and
-        # persist — InMemoryTableScan preserves outputPartitioning and
-        # ordering (spark.sql.optimizer.canChangeCachedPlanOutput-
-        # Partitioning defaults false), so every round's sort-merge
-        # join exchanges and sorts only the node-sized rank side.
-        # Explicit numPartitions: AQE must not coalesce the layout or
-        # the per-round co-partitioning match is lost.
-        spark = edges.sparkSession
-        nparts = shuffle_partitions(spark)
-        we = (
-            we.repartition(nparts, "src")
-            .sortWithinPartitions("src")
-            .persist()
-        )
-        we.count()  # materialize the layout once, before the loop
+    we = we.localCheckpoint() if bc else laid_out(we, "src")
     # dangling membership is static: carry it as a flag on the rank frame
     # so the per-round mass aggregate never joins (one node-sized scan)
     flagged = ids.join(
@@ -222,9 +209,6 @@ def pagerank(
         dmass = ranks.filter(~F.col("__out")).agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dmass")
         )
-        # rank side of the edge join: broadcast when the vertex set
-        # fits (see docstring) — the edge frame then streams map-only,
-        # no per-round exchange/sort of the big side
         rank_side = ranks.select("id", "rank")
         if bc:
             rank_side = F.broadcast(rank_side)
@@ -258,17 +242,9 @@ def pagerank(
                 ).alias("rank"),
                 "__prev",
             )
+            .localCheckpoint()
         )
-        # eager checkpoint: cut the iterative lineage (see docstring's
-        # checkpoint_interval trade — tol>0 always pins, its delta job
-        # materializes every round regardless)
-        if (
-            tol > 0.0
-            or checkpoint_interval <= 1
-            or (it + 1) % checkpoint_interval == 0
-            or it == max_iter - 1
-        ):
-            new_ranks = new_ranks.localCheckpoint()
+        ranks = new_ranks.drop("__prev")
         # tol=0.0 means "run exactly max_iter rounds": skip the delta job
         # entirely — it's one full join+aggregate pass per round otherwise
         if tol > 0.0 and it < max_iter - 1:
@@ -277,15 +253,11 @@ def pagerank(
                     F.sum(F.abs(F.col("rank") - F.col("__prev"))).alias("d")
                 ).collect()[0]["d"]
             )
-            ranks = new_ranks.drop("__prev")
             if delta is not None and delta <= tol:
                 break
-        else:
-            ranks = new_ranks.drop("__prev")
-    if use_layout:
+    if not bc:
         # every round ended in a localCheckpoint, so the returned frame
-        # no longer references the laid-out edge cache — release it
-        # (within-job pin, freed before the operator returns)
+        # no longer references the layout
         we.unpersist(blocking=False)
     return ranks.select("id", "rank")
 
@@ -316,24 +288,27 @@ def quality_weights(
     ).drop("rank")
 
 
-def _canonical_und_deg(edges, src_col, dst_col):
-    """Shared prep: canonical undirected edge set (self-loops and
-    duplicates out — one distinct shuffle, checkpointed because every
-    caller consumes it repeatedly) and the per-vertex degree frame."""
+def _canonical_und(edges, src_col, dst_col):
+    """Canonical undirected edge set (u < v): self-loops and duplicates
+    out — one distinct shuffle, pinned because every caller consumes it
+    repeatedly."""
     a, b = F.col(src_col), F.col(dst_col)
-    und = (
+    return (
         edges.filter(a != b)
         .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
         .distinct()
         .localCheckpoint()
     )
-    deg = (
+
+
+def _degrees(und, name):
+    """Per-vertex degree ``(id, name)`` of a canonical edge set."""
+    return (
         und.select(F.col("u").alias("id"))
         .unionAll(und.select(F.col("v").alias("id")))
         .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("d"))
+        .agg(F.count(F.lit(1)).alias(name))
     )
-    return und, deg
 
 
 def _triangles_per_node(und, deg):
@@ -405,8 +380,8 @@ def triangle_count(
     edge canonicalization, the wedge self-join, the closing-edge
     semi-join (plus a node-sized fold for per-node counts).
     """
-    und, deg = _canonical_und_deg(edges, src_col, dst_col)
-    per = _triangles_per_node(und, deg)
+    und = _canonical_und(edges, src_col, dst_col)
+    per = _triangles_per_node(und, _degrees(und, "d"))
     if per_node:
         return per
     # every triangle contributes exactly 3 corner rows
@@ -428,7 +403,8 @@ def clustering_coefficient(
     curation). Degree-1 vertices get 0. Shares the canonical edge set
     and degree frame with the triangle stages (computed once), then
     adds one node-sized join."""
-    und, deg = _canonical_und_deg(edges, src_col, dst_col)
+    und = _canonical_und(edges, src_col, dst_col)
+    deg = _degrees(und, "d")
     tri = _triangles_per_node(und, deg)
     return deg.withColumnRenamed("d", "deg").join(tri, "id", "left").select(
         "id",
@@ -548,9 +524,7 @@ def bfs_hops(
     dst_col: str = "dst",
     id_col: str = "id",
     directed: bool = False,
-    broadcast_frontier: bool | None = None,
     broadcast_max_nodes: int = 4_000_000,
-    edge_cache: bool | None = None,
 ) -> DataFrame:
     """Multi-source BFS: minimum hop distance from any source to every
     node reachable within ``max_hops`` — "blast radius" queries
@@ -566,31 +540,26 @@ def bfs_hops(
     (the SQL-replayable contract shared with ``k_core_fixed`` /
     ``pagerank``: a recursive-CTE oracle replays round-for-round; BFS
     is idempotent past convergence, so extra rounds only run empty
-    joins). Each round is ONE shuffle join of the frontier against the
+    joins). Each round is ONE join of the frontier against the
     adjacency list + one anti-join against the settled set — all
     frontier-sized, never path-enumerating (the naive recursive walk
     explodes paths; settling each node once is what makes BFS linear
     in edges). Only the per-hop FRONTIER is eagerly pinned; the
     settled set stays a flat union of the already-pinned frontiers, so
     lineage is still one round deep but the O(V) settled set is never
-    re-copied every round (r13: re-checkpointing the union cost one
-    extra eager job per hop and a full settled-set copy — at scale
-    that is O(V·hops) churn for zero recompute saved).
+    re-copied every round (re-checkpointing the union cost one extra
+    eager job per hop and a full settled-set copy).
 
-    ``broadcast_frontier`` (default ``None`` = auto): when the current
-    frontier fits a broadcast (``<= broadcast_max_nodes`` rows — each
-    round's frontier is already eagerly pinned, so the count is a
-    cheap job on the materialized RDD), the hop join broadcasts the
-    frontier and the ADJACENCY LIST STREAMS MAP-ONLY — no per-round
-    exchange/sort of the edge set; the settled set broadcasts into the
-    anti join under the same bound. Explicit ``True`` forces only the
-    FRONTIER side; the settled set (monotonically growing, unbounded)
-    stays gated on ``broadcast_max_nodes`` regardless. Hop distances are exact integers,
-    so join strategy cannot change the result. Past the bound (or
-    ``False``) the shuffled shape runs; at that scale pre-partition
-    the adjacency list on ``src`` once (bucketing) so every round's
-    join reuses the layout instead of reshuffling the full edge set
-    per level.
+    Join rule, from each round's frontier count (one cheap job on the
+    already-pinned frontier): while the frontier has at most
+    ``broadcast_max_nodes`` rows it is broadcast and the adjacency list
+    streams MAP-ONLY; the first round past the bound lays the adjacency
+    list out (:func:`laid_out` on ``src``) and every later round joins
+    against it (a frontier that shrinks back under the bound is
+    broadcast against the layout). The settled set, which only grows, is
+    broadcast into the anti join under the same bound on its own
+    running count. Hop distances are exact integers, so the join
+    strategy cannot change the result.
     """
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
@@ -601,64 +570,34 @@ def bfs_hops(
             edges.filter(s != d).select(d.alias("src"), s.alias("dst"))
         )
     adj = adj.distinct()
-    # Shuffled regime (frontier too big to broadcast): lay the adjacency
-    # list out ONCE — hash-partitioned on the per-hop join key, sorted,
-    # persisted — so each hop's join exchanges/sorts only the
-    # frontier-sized side instead of re-exchanging the edge set per
-    # level (same contract as ``pagerank``'s edge cache; VERDICT r13
-    # #4). ``edge_cache``: None = layout iff the caller forced the
-    # shuffled path (broadcast_frontier=False); True forces the layout
-    # (callers who know frontiers will exceed the bound); False keeps
-    # the legacy shape as a measurement control.
-    use_layout = (
-        edge_cache
-        if edge_cache is not None
-        else broadcast_frontier is False
-    )
-    if use_layout:
-        spark = edges.sparkSession
-        nparts = shuffle_partitions(spark)
-        adj = (
-            adj.repartition(nparts, "src")
-            .sortWithinPartitions("src")
-            .persist()
-        )
-        adj.count()  # materialize the layout once, before the loop
-    else:
-        adj = adj.localCheckpoint(eager=False)
+    pinned = adj.localCheckpoint(eager=False)
     dist = (
         sources.select(F.col(id_col).alias("id"))
         .distinct()
         .select("id", F.lit(0).cast("long").alias("dist"))
         .localCheckpoint(eager=True)
     )
-    auto = broadcast_frontier is None
-    # the settled set grows monotonically and unboundedly, so its
-    # broadcast is ALWAYS gated on broadcast_max_nodes — even under
-    # explicit broadcast_frontier=True, which controls only the
-    # frontier side (ADVICE r13: force-broadcasting the growing settled
-    # set can OOM on a large reachable graph; tracking it costs one
-    # count per hop on the already-pinned frontier RDD)
-    track = auto or broadcast_frontier is True
-    f_rows = dist.count() if track else 0
+    f_rows = dist.count()
     settled_rows = f_rows
     frontier = dist
+    layout = None
     for hop in range(1, max_hops + 1):
-        bc_f = (
-            (f_rows <= broadcast_max_nodes)
-            if auto
-            else bool(broadcast_frontier)
-        )
+        bc_f = f_rows <= broadcast_max_nodes
+        if not bc_f and layout is None:
+            # before any round has run the lazy pin is still empty: lay
+            # out from the unpinned plan so it is never filled
+            layout = laid_out(adj if hop == 1 else pinned, "src")
+        e_side = pinned if layout is None else layout
         f_side = frontier.select("id")
         if bc_f:
             f_side = F.broadcast(f_side)
         reached = (
-            f_side.join(adj, f_side["id"] == adj["src"])
+            f_side.join(e_side, f_side["id"] == e_side["src"])
             .select(F.col("dst").alias("id"))
             .distinct()
         )
         settled_side = dist.select("id")
-        if track and settled_rows <= broadcast_max_nodes:
+        if settled_rows <= broadcast_max_nodes:
             settled_side = F.broadcast(settled_side)
         new = (
             reached.join(settled_side, "id", "left_anti")
@@ -667,13 +606,12 @@ def bfs_hops(
         )
         dist = dist.unionAll(new)
         frontier = new
-        if track:
-            f_rows = new.count()
-            settled_rows += f_rows
-    if use_layout:
+        f_rows = new.count()
+        settled_rows += f_rows
+    if layout is not None:
         # every hop's frontier is eagerly pinned, so the returned union
-        # no longer references the laid-out adjacency cache
-        adj.unpersist(blocking=False)
+        # no longer references the layout
+        layout.unpersist(blocking=False)
     return dist
 
 
@@ -686,9 +624,7 @@ def shortest_paths(
     weight_col: str = "weight",
     id_col: str = "id",
     directed: bool = False,
-    broadcast_dist: bool | None = None,
     broadcast_max_nodes: int = 4_000_000,
-    edge_cache: bool | None = None,
 ) -> DataFrame:
     """Multi-source weighted shortest paths, Bellman–Ford unrolled to
     exactly ``rounds`` relaxation rounds — the cost-aware sibling of
@@ -703,23 +639,22 @@ def shortest_paths(
     not the global one).
 
     Each round relaxes the WHOLE frontier-so-far: one join of the
-    current distance frame against the adjacency list (shuffle on the
-    join key) + one min-aggregate on the destination (second
-    exchange), both distance-frame-sized — never path-enumerating
-    (the oracle's recursive CTE enumerates path costs and dedups;
-    this keeps one row per node throughout). ``localCheckpoint`` pins
-    each round.
+    current distance frame against the adjacency list + one
+    min-aggregate on the destination (an exchange), both
+    distance-frame-sized — never path-enumerating (the oracle's
+    recursive CTE enumerates path costs and dedups; this keeps one row
+    per node throughout). ``localCheckpoint`` pins each round.
 
-    ``broadcast_dist`` (default ``None`` = auto): while the distance
-    frame fits a broadcast (``<= broadcast_max_nodes`` rows, counted
-    on the round's already-pinned RDD), the relaxation join broadcasts
-    it and the adjacency list streams MAP-ONLY — the only per-round
-    exchange left is the min-aggregate, the inherent cost of min-plus
-    iteration. The per-node min over candidate costs is
-    order-independent (exact float comparison, no accumulation), so
-    join strategy cannot change the result. Past the bound (or
-    ``False``) the shuffled join runs; at that scale bucket the
-    adjacency list on ``src`` so every round's join reuses the layout.
+    Join rule, from the distance frame's count (taken on the round's
+    already-pinned frame, and no longer once past the bound — the frame
+    only grows): while it has at most ``broadcast_max_nodes`` rows the
+    relaxation join broadcasts it and the adjacency list streams
+    MAP-ONLY, leaving the min-aggregate as the only per-round exchange;
+    the first round past the bound lays the adjacency list out
+    (:func:`laid_out` on ``src``) and every later round reuses it. The
+    per-node min over candidate costs is order-independent (exact float
+    comparison, no accumulation), so the join strategy cannot change
+    the result.
     """
     if rounds < 0:
         raise ValueError("rounds must be >= 0")
@@ -734,39 +669,25 @@ def shortest_paths(
             )
         )
     adj = adj.groupBy("src", "dst").agg(F.min("w").alias("w"))
-    # shuffled regime: lay the adjacency list out once (partitioned on
-    # the relaxation join key + sorted + persisted) so each round
-    # exchanges only the node-sized distance frame — same contract and
-    # knob semantics as ``bfs_hops``/``pagerank`` (VERDICT r13 #4)
-    use_layout = (
-        edge_cache if edge_cache is not None else broadcast_dist is False
-    )
-    if use_layout:
-        spark = edges.sparkSession
-        nparts = shuffle_partitions(spark)
-        adj = (
-            adj.repartition(nparts, "src")
-            .sortWithinPartitions("src")
-            .persist()
-        )
-        adj.count()  # materialize the layout once, before the loop
-    else:
-        adj = adj.localCheckpoint(eager=False)
+    pinned = adj.localCheckpoint(eager=False)
     dist = (
         sources.select(F.col(id_col).alias("id"))
         .distinct()
         .select("id", F.lit(0).cast("long").alias("cost"))
         .localCheckpoint(eager=True)
     )
-    auto = broadcast_dist is None
-    d_rows = dist.count() if auto else 0
-    for _ in range(rounds):
-        bc = (
-            (d_rows <= broadcast_max_nodes) if auto else bool(broadcast_dist)
-        )
+    d_rows = dist.count()
+    layout = None
+    for i in range(rounds):
+        bc = d_rows <= broadcast_max_nodes
+        if not bc and layout is None:
+            # lay out from the unpinned plan while the lazy pin is
+            # still empty (no round has run yet)
+            layout = laid_out(adj if i == 0 else pinned, "src")
+        e_side = pinned if layout is None else layout
         d_side = F.broadcast(dist) if bc else dist
         relaxed = (
-            d_side.join(adj, d_side["id"] == adj["src"])
+            d_side.join(e_side, d_side["id"] == e_side["src"])
             .select(F.col("dst").alias("id"), (F.col("cost") + F.col("w")).alias("cost"))
         )
         dist = (
@@ -775,16 +696,29 @@ def shortest_paths(
             .agg(F.min("cost").alias("cost"))
             .localCheckpoint(eager=True)
         )
-        if auto and d_rows <= broadcast_max_nodes:
-            # the distance frame only grows (min-agg over a union), so
-            # once it exceeds the bound it can never fit again — stop
-            # paying the per-round count job (ADVICE r13)
+        if bc:
+            # the frame only grows: past the bound it never fits again
             d_rows = dist.count()
-    if use_layout:
+    if layout is not None:
         # each round's distance frame is eagerly pinned, so the result
-        # no longer references the laid-out adjacency cache
-        adj.unpersist(blocking=False)
+        # no longer references the layout
+        layout.unpersist(blocking=False)
     return dist
+
+
+def _peel(und, alive, bc):
+    """One k-core peel: keep the edges of ``und`` whose both endpoints
+    are in ``alive``, pinned. ``bc`` broadcasts the node-sized survivor
+    frame into both semi-joins, so the edge set streams MAP-ONLY."""
+    a_u = alive.select(F.col("id").alias("u"))
+    a_v = alive.select(F.col("id").alias("v"))
+    if bc:
+        a_u, a_v = F.broadcast(a_u), F.broadcast(a_v)
+    return (
+        und.join(a_u, "u", "left_semi")
+        .join(a_v, "v", "left_semi")
+        .localCheckpoint()
+    )
 
 
 def k_core_fixed(
@@ -793,7 +727,6 @@ def k_core_fixed(
     rounds: int,
     src_col: str = "src",
     dst_col: str = "dst",
-    broadcast_alive: bool | None = None,
     broadcast_max_nodes: int = 4_000_000,
 ) -> DataFrame:
     """Exactly ``rounds`` peel iterations of k-core decomposition —
@@ -811,57 +744,25 @@ def k_core_fixed(
     edge set, each round's frame pinned with ``localCheckpoint`` so
     lineage (and recompute on failure) stays one round deep.
 
-    ``broadcast_alive`` (default ``None`` = auto): when the surviving
-    vertex frame fits a broadcast, the two peel semi-joins broadcast
-    it and the edge set streams MAP-ONLY — the only per-round exchange
-    left is the degree aggregate (inherent). The auto decision is made
-    ONCE, from the round-0 survivor count on its already-pinned frame
-    (survivors only shrink, so a fitting round-0 frame fits every
-    round; the earlier 2·|edges| proxy never broadcast dense
-    few-vertex graphs) — a per-round ``alive.count()`` variant
-    measured SLOWER (the extra job per peel cost more than it
-    informed). Set membership is exact, so strategy cannot change the
-    result.
+    Join rule, decided ONCE from the round-0 survivor count on its
+    already-pinned frame: at most ``broadcast_max_nodes`` survivors
+    are broadcast into every peel's semi-joins (survivors only shrink,
+    so a fitting round-0 frame fits every round); otherwise the peels
+    shuffle. A per-round re-count measured slower (the extra job per
+    peel cost more than it informed). Set membership is exact, so the
+    strategy cannot change the result.
     """
     if k < 1 or rounds < 1:
         raise ValueError("k and rounds must be >= 1")
-    a, b = F.col(src_col), F.col(dst_col)
-    und = (
-        edges.filter(a != b)
-        .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    # auto gate decided ONCE, from the ROUND-0 SURVIVOR count (taken on
-    # the already-pinned frame — the first round must materialize it
-    # anyway, and survivors only shrink, so a fitting round-0 frame fits
-    # every round). The r13 gate used 2·|edges| as a proxy, which never
-    # broadcasts on dense few-vertex graphs (ADVICE r13); the exact
-    # count costs nothing extra and a per-round re-count measured SLOWER
-    # (kept rejected).
-    bc = None if broadcast_alive is None else bool(broadcast_alive)
-    alive = None
+    und = _canonical_und(edges, src_col, dst_col)
+    bc = None
     for i in range(rounds):
-        deg = (
-            und.select(F.col("u").alias("id"))
-            .unionAll(und.select(F.col("v").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("core_degree"))
-        )
-        alive = deg.filter(F.col("core_degree") >= k)
+        alive = _degrees(und, "core_degree").filter(F.col("core_degree") >= k)
         if i < rounds - 1:
             alive = alive.localCheckpoint()
             if bc is None:
                 bc = alive.count() <= broadcast_max_nodes
-            a_u = alive.select(F.col("id").alias("u"))
-            a_v = alive.select(F.col("id").alias("v"))
-            if bc:
-                a_u, a_v = F.broadcast(a_u), F.broadcast(a_v)
-            und = (
-                und.join(a_u, "u", "left_semi")
-                .join(a_v, "v", "left_semi")
-                .localCheckpoint()
-            )
+            und = _peel(und, alive, bc)
     return alive
 
 
@@ -871,7 +772,6 @@ def k_core(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iter: int = 100,
-    broadcast_alive: bool | None = None,
     broadcast_max_nodes: int = 4_000_000,
 ) -> DataFrame:
     """Vertices of the k-core: the maximal subgraph where every vertex
@@ -888,45 +788,24 @@ def k_core(
     the surviving-vertex count (one scalar per round). The iteration
     count is bounded by the peel depth (≤ vertex count; in practice a
     handful of rounds), ``max_iter`` guards pathological chains.
+
+    Join rule, from that per-round survivor count: at most
+    ``broadcast_max_nodes`` survivors are broadcast into the peel's
+    semi-joins, otherwise the peel shuffles.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    a, b = F.col(src_col), F.col(dst_col)
-    und = (
-        edges.filter(a != b)
-        .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
-        .distinct()
-        .localCheckpoint()
-    )
+    und = _canonical_und(edges, src_col, dst_col)
     prev_n = None
     for _ in range(max_iter):
-        deg = (
-            und.select(F.col("u").alias("id"))
-            .unionAll(und.select(F.col("v").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("core_degree"))
+        alive = (
+            _degrees(und, "core_degree")
+            .filter(F.col("core_degree") >= k)
+            .localCheckpoint()
         )
-        alive = deg.filter(F.col("core_degree") >= k).localCheckpoint()
         n = alive.count()
         if n == prev_n or n == 0:
             return alive
         prev_n = n
-        # broadcast the node-sized survivor frame into the peel
-        # semi-joins when it fits (the count above is already paid):
-        # the edge set then streams map-only — same contract as
-        # ``k_core_fixed``'s ``broadcast_alive``
-        bc = (
-            (n <= broadcast_max_nodes)
-            if broadcast_alive is None
-            else bool(broadcast_alive)
-        )
-        a_u = alive.select(F.col("id").alias("u"))
-        a_v = alive.select(F.col("id").alias("v"))
-        if bc:
-            a_u, a_v = F.broadcast(a_u), F.broadcast(a_v)
-        und = (
-            und.join(a_u, "u", "left_semi")
-            .join(a_v, "v", "left_semi")
-            .localCheckpoint()
-        )
+        und = _peel(und, alive, n <= broadcast_max_nodes)
     return alive

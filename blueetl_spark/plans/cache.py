@@ -23,6 +23,11 @@ Differences by design (SURVEY §7 hard-parts):
   ``load`` hands it to the reader: reopening a cached table starts no
   parquet schema-inference job (meta written without a schema still loads,
   by inference).
+- It also records the frame's ``_blueetl_*`` attributes (driver-side facts
+  such as the windows table's ``_blueetl_time_bounds``), and every frame
+  ``load`` or ``fetch`` returns carries them again. A refiltered frame
+  keeps them too: its rows are a subset, so the recorded time bounds
+  still enclose them.
 - A coordinate subfilter resolved against the cached simulations table is
   memoized per (filter, id column), so fetching N feature tables through
   one subfilter collects the surviving ids once; dumping or deleting
@@ -73,12 +78,20 @@ def checksum(obj: Any) -> str:
     return hashlib.blake2b(payload, digest_size=16).hexdigest()
 
 
+def _with_attrs(df: DataFrame, meta: dict[str, Any]) -> DataFrame:
+    """``df`` with the ``_blueetl_*`` attributes recorded in ``meta``
+    (JSON lists back to tuples)."""
+    for attr, value in (meta.get("attrs") or {}).items():
+        setattr(df, attr, tuple(value) if isinstance(value, list) else value)
+    return df
+
+
 class CacheManager:
     """Parquet + JSON-metadata cache for named DataFrames.
 
     Layout: ``<path>/<name>.parquet/`` (directory dataset) and
     ``<path>/<name>.meta.json`` with ``{"checksum", "filter", "written_at",
-    "schema"}``.
+    "schema", "attrs"}``.
     """
 
     def __init__(self, spark: SparkSession, path: str | Path, readonly: bool = False):
@@ -114,11 +127,11 @@ class CacheManager:
         )
 
     def load(self, name: str) -> DataFrame:
+        meta = self.get_meta(name) or {}
         reader = self.spark.read
-        schema = (self.get_meta(name) or {}).get("schema")
-        if schema is not None:  # pinned: no schema-inference job
-            reader = reader.schema(StructType.fromJson(schema))
-        return reader.parquet(str(self._data_path(name)))
+        if meta.get("schema") is not None:  # pinned: no schema-inference job
+            reader = reader.schema(StructType.fromJson(meta["schema"]))
+        return _with_attrs(reader.parquet(str(self._data_path(name))), meta)
 
     def dump(
         self,
@@ -157,6 +170,7 @@ class CacheManager:
             "filter": simulations_filter,
             "written_at": time.time(),
             "schema": df.schema.jsonValue(),
+            "attrs": {k: v for k, v in vars(df).items() if k.startswith("_blueetl_")},
         }
         if name == "simulations":
             self._resolved.clear()
@@ -226,12 +240,12 @@ class CacheManager:
             return None
         df = self.load(name)
         if _query_keys(requested) <= set(df.columns):
-            return df.filter(compile_query(requested))
+            return _with_attrs(df.filter(compile_query(requested)), meta)
         resolved = self._resolve_via_simulations(requested, filter_columns, df.columns)
         if resolved is None:
             return None  # can't refilter soundly → force recompute
         key, values = resolved
-        return df.filter(F.col(key).isin(values))
+        return _with_attrs(df.filter(F.col(key).isin(values)), meta)
 
     def _resolve_via_simulations(
         self,
@@ -296,12 +310,5 @@ class CachedPipeline:
         hit = self.cache.fetch(name, cs, self.simulations_filter)
         if hit is not None:
             return hit
-        df = compute()
-        self.cache.dump(name, df, cs, self.simulations_filter)
-        loaded = self.cache.load(name)
-        # driver-side facts stashed on the computed frame (the windows
-        # table's ``_blueetl_time_bounds``) hold for its reload too
-        for attr, value in vars(df).items():
-            if attr.startswith("_blueetl_"):
-                setattr(loaded, attr, value)
-        return loaded
+        self.cache.dump(name, compute(), cs, self.simulations_filter)
+        return self.cache.load(name)

@@ -4,6 +4,8 @@ equivalence, apply_filter — mirrors the reference's functional protocol
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -475,6 +477,24 @@ def test_cold_cached_windows_keep_time_bounds(spark, data, tmp_path, count_jobs)
     windows = a.windows
     _, jobs = count_jobs(lambda: time_bounds_filter(windows))
     assert jobs == 0
+
+
+def test_warm_cached_windows_keep_time_bounds(spark, data, tmp_path, count_jobs):
+    """A windows cache hit, through an equal filter or a subfilter, still
+    carries the bounds recorded at dump time."""
+    from blueetl_spark.operators.windows import time_bounds_filter
+
+    nodes, events = data
+    cache = tmp_path / "c"
+    cold = MultiAnalyzer(spark, CONFIG, nodes, events, cache_path=cache).spikes.windows
+    meta = cache / "spikes" / "windows.meta.json"
+    dumped = json.loads(meta.read_text())
+    for cfg in (CONFIG, {**CONFIG, "simulations_filter": {"seed": 2}}):
+        windows = MultiAnalyzer(spark, cfg, nodes, events, cache_path=cache).spikes.windows
+        assert windows._blueetl_time_bounds == cold._blueetl_time_bounds
+        _, jobs = count_jobs(lambda: time_bounds_filter(windows))
+        assert jobs == 0
+    assert json.loads(meta.read_text()) == dumped  # both were cache hits
 
 
 def test_warm_requery_jobs_do_not_grow_with_features(spark, data, tmp_path, count_jobs):

@@ -187,7 +187,7 @@ def test_failed_dump_leaves_no_residue(spark, cache):
 
 def test_get_or_compute_carries_driver_side_attributes(spark, tmp_path):
     """Facts stashed on the computed frame (windows' time bounds) survive
-    the dump + reload of a cold cached step."""
+    the dump + reload of a cold cached step, and a later cache hit."""
     pipe = CachedPipeline(CacheManager(spark, tmp_path / "c"), {"windows": {}})
 
     def compute():
@@ -196,3 +196,5 @@ def test_get_or_compute_carries_driver_side_attributes(spark, tmp_path):
         return df
 
     assert pipe.get_or_compute("windows", compute)._blueetl_time_bounds == (0.0, 5.0)
+    hit = pipe.get_or_compute("windows", lambda: _df(spark, [1]))
+    assert hit._blueetl_time_bounds == (0.0, 5.0)

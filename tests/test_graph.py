@@ -46,26 +46,6 @@ def test_pagerank_matches_numpy(spark, edges_df):
     assert sum(got.values()) == pytest.approx(1.0, rel=1e-9)
 
 
-def test_pagerank_checkpoint_interval_equivalent(spark, edges_df):
-    """checkpoint_interval folds rounds into one job without changing a
-    single rank: intervals 1, 2 and 3 must agree bit-for-bit on a
-    fixed-iteration run (the knob is a lineage/job-count trade only)."""
-    base = {
-        r["id"]: r["rank"]
-        for r in pagerank(
-            edges_df, max_iter=5, tol=0.0, checkpoint_interval=1
-        ).collect()
-    }
-    for ci in (2, 3):
-        got = {
-            r["id"]: r["rank"]
-            for r in pagerank(
-                edges_df, max_iter=5, tol=0.0, checkpoint_interval=ci
-            ).collect()
-        }
-        assert got == base, ci
-
-
 def test_pagerank_dangling_and_isolated(spark):
     # 0 -> 1, 1 dangles; node 7 is isolated (only via `nodes`)
     e = spark.createDataFrame([(0, 1)], "src long, dst long")
@@ -512,51 +492,112 @@ def test_shortest_paths_min_cost_and_bounds(spark):
     assert directed == {4: 0}   # node 4 has no out-edges
 
 
-def test_broadcast_strategy_flags_do_not_change_results(spark):
-    """r13 optimization contract: the broadcast-vs-shuffle join
-    strategy knobs on the iterative operators are pure plan-shape
-    choices — every output row must be identical under broadcast=True,
-    broadcast=False, and the node-count auto mode. PageRank is the
-    float case (per-dst accumulation order shifts ~1e-15; its gates
-    round to 9 dp, asserted at the operator grain here with exact
-    equality on the rounded value); BFS/shortest-paths/k-core are
-    exact integers/mins, where equality is bitwise."""
-    from blueetl_spark.operators.graph import (
-        bfs_hops,
-        k_core_fixed,
-        shortest_paths,
-    )
+# One seed: its first frontier (1 row, then 2) fits the bounds 1 and 3,
+# so bfs_hops and shortest_paths start broadcast and switch to the edge
+# layout partway through the run. The 3-cycle 10-11-12 and the
+# 4-cycles keep a non-empty 2-core.
+PARITY_EDGES = [
+    (1, 2), (1, 3), (2, 3), (2, 4), (2, 5), (3, 6), (3, 7), (4, 8),
+    (5, 8), (6, 9), (7, 9), (8, 10), (9, 10), (10, 11), (11, 12), (12, 10),
+]
 
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (8, 3), (2, 4), (3, 1)],
-        "src long, dst long",
-    )
-    seeds = spark.createDataFrame([(1,), (8,)], "id long")
-    wedges = edges.select(
+
+def _parity_ops(spark):
+    from blueetl_spark.operators import graph
+
+    e = spark.createDataFrame(PARITY_EDGES, "src long, dst long")
+    we = e.select(
         "src", "dst", (1 + (F.col("src") + F.col("dst")) % 3).alias("weight")
     )
+    seed = spark.createDataFrame([(1,)], "id long")
+    pers = spark.createDataFrame([(1, 1.0), (9, 2.0)], "id long, weight double")
+    return {
+        "pagerank": lambda **kw: graph.pagerank(e, max_iter=5, tol=0.0, **kw),
+        "pagerank_personalized": lambda **kw: graph.pagerank(
+            e, max_iter=5, tol=0.0, personalization=pers, **kw
+        ),
+        # stops on the L1 delta after 7 of the 20 rounds
+        "pagerank_tol": lambda **kw: graph.pagerank(
+            e, max_iter=20, tol=0.15, **kw
+        ),
+        "bfs_hops": lambda **kw: graph.bfs_hops(e, seed, 5, **kw),
+        "bfs_hops_directed": lambda **kw: graph.bfs_hops(
+            e, seed, 5, directed=True, **kw
+        ),
+        "shortest_paths": lambda **kw: graph.shortest_paths(we, seed, 5, **kw),
+        "k_core_fixed": lambda **kw: graph.k_core_fixed(e, k=2, rounds=3, **kw),
+        "k_core": lambda **kw: graph.k_core(e, k=2, **kw),
+    }
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "pagerank", "pagerank_personalized", "pagerank_tol", "bfs_hops",
+        "bfs_hops_directed", "shortest_paths", "k_core_fixed", "k_core",
+    ],
+)
+def test_broadcast_bound_does_not_change_results(spark, monkeypatch, op):
+    """The broadcast bound only picks the join strategy: every bound
+    gives the default's rows. Ints and mins are compared exactly; ranks
+    after rounding to 9 dp (the broadcast shape sums each dst's
+    contributions in another order, ~1e-15 relative). The edge layout is
+    built at most once per call."""
+    from blueetl_spark.operators import graph
+
+    layouts = []
+
+    def counting(edges, key):
+        layouts.append(key)
+        return laid_out(edges, key)
+
+    laid_out = graph.laid_out
+    monkeypatch.setattr(graph, "laid_out", counting)
+    run = _parity_ops(spark)[op]
 
     def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    for flag in (True, False):
-        assert rows(bfs_hops(edges, seeds, 3, broadcast_frontier=flag)) == (
-            rows(bfs_hops(edges, seeds, 3))
+        return sorted(
+            tuple(round(v, 9) if isinstance(v, float) else v for v in r)
+            for r in df.collect()
         )
-        assert rows(
-            shortest_paths(wedges, seeds, 3, broadcast_dist=flag)
-        ) == rows(shortest_paths(wedges, seeds, 3))
-        assert rows(
-            k_core_fixed(edges, k=2, rounds=3, broadcast_alive=flag)
-        ) == rows(k_core_fixed(edges, k=2, rounds=3))
-        got = {
-            r["id"]: round(r["rank"], 9)
-            for r in pagerank(
-                edges, max_iter=5, tol=0.0, broadcast_ranks=flag
-            ).collect()
-        }
-        auto = {
-            r["id"]: round(r["rank"], 9)
-            for r in pagerank(edges, max_iter=5, tol=0.0).collect()
-        }
-        assert got == auto
+
+    default = rows(run())
+    assert default
+    assert layouts == []
+    for bound in (0, 1, 3):
+        layouts.clear()
+        assert rows(run(broadcast_max_nodes=bound)) == default, bound
+        assert len(layouts) == (0 if op.startswith("k_core") else 1), bound
+
+
+def _cache_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+@pytest.mark.parametrize("bound", [0, None], ids=["layout", "broadcast"])
+def test_edge_layout_is_released(spark, bound):
+    """Each iterative operator leaves the session's cached-data registry
+    as it found it, in both regimes: the edge layout (and the persisted
+    edge list of connected_components) is unpersisted before return.
+    ``getPersistentRDDs`` would also list the localCheckpoint blocks."""
+    from blueetl_spark.operators import dedup
+
+    ops = _parity_ops(spark)
+    kw = {} if bound is None else {"broadcast_max_nodes": bound}
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
+    )
+    calls = {
+        name: (lambda name=name: ops[name](**kw))
+        for name in ("pagerank", "bfs_hops", "shortest_paths")
+    }
+    calls["connected_components"] = lambda: dedup.connected_components(
+        pairs,
+        max_driver_edges=0,
+        **({} if bound is None else {"broadcast_max_labels": bound}),
+    )
+    for name, call in calls.items():
+        before = _cache_entries(spark)
+        out = call()
+        assert _cache_entries(spark) == before, name
+        assert out.count() > 0

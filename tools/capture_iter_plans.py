@@ -5,12 +5,13 @@ every round ends in a localCheckpoint that truncates lineage.
 Hooks ``DataFrame.localCheckpoint`` to dump each checkpointed frame's
 plan (the round's full plan, formed immediately before the pin) while
 the REAL operator runs on a small graph, forced onto the shuffled
-(above-the-broadcast-bound) path. Plan SHAPE is size-independent here:
-both broadcast gates are explicit flags, not size estimates.
+(above-the-broadcast-bound) path with the edge layout. Plan SHAPE is
+size-independent here: the broadcast bounds are 0, not size estimates.
 
-    python tools/capture_iter_plans.py <op> <legacy|layout>
+    python tools/capture_iter_plans.py <pagerank|bfs_hops|shortest_paths|components>
 
-Writes plans/r14/<op>_iter_<mode>.txt (all rounds concatenated).
+Writes plans/$SPARK_GRAFT_PLANS_DIR/<op>_iter.txt (default directory
+r14; all rounds concatenated).
 """
 
 from __future__ import annotations
@@ -28,15 +29,13 @@ from blueetl_spark.session import get_spark
 
 def main() -> int:
     op = sys.argv[1]
-    mode = sys.argv[2]
-    layout = mode == "layout"
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
         os.environ.get("SPARK_GRAFT_PLANS_DIR", "r14"),
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name=f"capture_iter_{op}_{mode}")
+    spark = get_spark(app_name=f"capture_iter_{op}")
 
     dumps: list[str] = []
     orig = CDF.localCheckpoint
@@ -64,22 +63,20 @@ def main() -> int:
             from blueetl_spark.operators.graph import pagerank
 
             pagerank(
-                e, max_iter=3, tol=0.0, broadcast_ranks=False,
-                edge_cache=layout,
+                e, max_iter=3, tol=0.0, broadcast_max_nodes=0
             ).write.format("noop").mode("overwrite").save()
         elif op == "bfs_hops":
             from blueetl_spark.operators.graph import bfs_hops
 
             bfs_hops(
-                e, spark.range(10), max_hops=3,
-                broadcast_frontier=False, edge_cache=layout,
+                e, spark.range(10), max_hops=3, broadcast_max_nodes=0
             ).write.format("noop").mode("overwrite").save()
         elif op == "shortest_paths":
             from blueetl_spark.operators.graph import shortest_paths
 
             shortest_paths(
                 e.withColumn("weight", F.lit(1.0)), spark.range(10),
-                rounds=3, broadcast_dist=False, edge_cache=layout,
+                rounds=3, broadcast_max_nodes=0,
             ).write.format("noop").mode("overwrite").save()
         elif op == "components":
             from blueetl_spark.operators.dedup import connected_components
@@ -88,14 +85,13 @@ def main() -> int:
                 e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
                 .filter("a != b"),
                 "a", "b", max_driver_edges=0, broadcast_max_labels=0,
-                edge_cache=layout,
             ).write.format("noop").mode("overwrite").save()
         else:
             raise SystemExit(f"unknown op {op}")
     finally:
         CDF.localCheckpoint = orig
 
-    path = os.path.join(out_dir, f"{op}_iter_{mode}.txt")
+    path = os.path.join(out_dir, f"{op}_iter.txt")
     with open(path, "w") as fh:
         for i, d in enumerate(dumps):
             fh.write(f"=== checkpointed frame {i} ===\n{d}\n")
