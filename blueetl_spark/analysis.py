@@ -39,9 +39,9 @@ from blueetl_spark.operators.extraction import (
     extract_neurons,
     extract_report,
 )
-from blueetl_spark.operators.windows import materialize_windows
+from blueetl_spark.operators.windows import materialize_windows, windows_table
 from blueetl_spark.plans.cache import CacheManager, CachedPipeline, checksum
-from blueetl_spark.schemas import validate_windows
+from blueetl_spark.schemas import WINDOWS_SCHEMA, validate_windows
 from blueetl_spark.sources.campaign import SimulationCampaign
 
 
@@ -279,24 +279,26 @@ class Analyzer:
                     # fixed window next to an onset one keeps its offset
                     dynamic_windows=dyn_names or None,
                 )
-            for n, c in refs.items():
+            if refs:
                 # copy the MATERIALIZED rows of the source window (incl.
                 # its dynamic offsets), renamed — reference
-                # _load_records_from_resolver semantics
-                a_name, w_name = c["window_ref"]
-                if self._resolver is None:
-                    raise ValueError(
-                        f"window {n!r} references {a_name}.extraction."
-                        f"windows.{w_name} but this Analyzer has no "
-                        "resolver (use MultiAnalyzer for cross-analysis "
-                        "window references)"
-                    )
-                rows = (
-                    self._resolver(a_name)
-                    .windows.filter(F.col("window") == w_name)
-                    .withColumn("window", F.lit(n))
-                )
-                w = rows if w is None else w.unionByName(rows)
+                # _load_records_from_resolver semantics; all rows are
+                # driver rows, so the table stays driver-resident
+                rows = [tuple(r) for r in w.collect()] if w is not None else []
+                for n, c in refs.items():
+                    a_name, w_name = c["window_ref"]
+                    if self._resolver is None:
+                        raise ValueError(
+                            f"window {n!r} references {a_name}.extraction."
+                            f"windows.{w_name} but this Analyzer has no "
+                            "resolver (use MultiAnalyzer for cross-analysis "
+                            "window references)"
+                        )
+                    src = self._resolver(a_name).windows.filter(
+                        F.col("window") == w_name
+                    ).select(WINDOWS_SCHEMA.fieldNames())
+                    rows += [(*r[:2], n, *r[3:]) for r in src.collect()]
+                w = windows_table(self.spark, rows)
             validate_windows(w)
             return w
 

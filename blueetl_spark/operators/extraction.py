@@ -432,24 +432,43 @@ def extract_report(
     so unclassified gids drop out — then the broadcast interval join against
     windows with time re-based (reference ``extract/spikes.py:19-29``,
     output schema ``report.py:44-58``).
+
+    With ``simulations``, its rows are read on the driver (no job for a
+    driver-resident table): the events scan keeps only the selected
+    simulations (``simulation_id IN (...)``, pushed to the scan before any
+    join), and a missing ``circuit_id`` is mapped from the simulation id.
     """
     from blueetl_spark.operators.windows import slice_events, time_bounds_filter
 
+    sim_circuit = None  # simulation_id -> circuit_id of the selected runs
+    if simulations is not None:
+        sim_circuit = dict(
+            tuple(r) for r in simulations.select("simulation_id", "circuit_id").collect()
+        )
     if "simulation_id" not in events.columns:
-        if simulations is None:
+        if sim_circuit is None:
             raise ValueError("events lack simulation_id and no simulations given")
-        sims = simulations.select("simulation_id").collect()
-        if len(sims) != 1:
+        if len(sim_circuit) != 1:
             raise ValueError("cannot infer simulation_id for multi-run campaign")
         events = events.withColumn(
-            "simulation_id", F.lit(sims[0].simulation_id).cast("smallint")
+            "simulation_id", F.lit(next(iter(sim_circuit))).cast("smallint")
+        )
+    if sim_circuit is not None:
+        sim_type = events.schema["simulation_id"].dataType
+        events = events.filter(
+            F.col("simulation_id").isin([F.lit(s).cast(sim_type) for s in sim_circuit])
         )
     if "circuit_id" not in events.columns:
-        if simulations is not None:
-            sim_circuit = simulations.select("simulation_id", "circuit_id").distinct()
-            events = events.join(F.broadcast(sim_circuit), "simulation_id")
+        if sim_circuit is None:
+            circuit = F.lit(0).cast("smallint")
         else:
-            events = events.withColumn("circuit_id", F.lit(0).cast("smallint"))
+            pairs = [F.lit(x) for kv in sim_circuit.items() for x in kv]
+            circuit = (
+                F.element_at(F.create_map(*pairs), F.col("simulation_id"))
+                if pairs
+                else F.lit(None)  # no simulation selected: no event is kept
+            ).cast(simulations.schema["circuit_id"].dataType)
+        events = events.withColumn("circuit_id", circuit)
 
     # Push the global time envelope down to the scan before any join.
     events = events.filter(time_bounds_filter(windows, time_col))

@@ -32,6 +32,9 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from blueetl_spark.session import local_df
 
 GROUP_KEYS = ["simulation_id", "circuit_id", "neuron_class", "window"]
 
@@ -39,14 +42,27 @@ GROUP_KEYS = ["simulation_id", "circuit_id", "neuron_class", "window"]
 def _window_meta(windows: DataFrame) -> DataFrame:
     """Per-(simulation, window): duration, t_start, t_stop, n_trials.
 
-    Trials of a window share bounds (validated at extraction), so ``first``
-    is exact.
+    Aggregated on the driver into a driver-resident frame: the windows table
+    is config-sized, and collecting a driver-resident one runs no job.
+    Trials of a window share bounds (validated at extraction), so the first
+    row's bounds are exact; ``n_trials`` counts distinct non-null trials.
     """
-    return windows.groupBy("simulation_id", "window").agg(
-        F.first("t_start").alias("t_start"),
-        F.first("t_stop").alias("t_stop"),
-        F.first("duration").alias("duration"),
-        F.countDistinct("trial").alias("n_trials"),
+    groups: dict[tuple, tuple[tuple, set]] = {}  # key -> (bounds, trials)
+    for r in windows.select(
+        "simulation_id", "window", "t_start", "t_stop", "duration", "trial"
+    ).collect():
+        key = (r.simulation_id, r.window)
+        groups.setdefault(key, ((r.t_start, r.t_stop, r.duration), set()))[1].add(r.trial)
+    fields = {f.name: f for f in windows.schema.fields}
+    schema = T.StructType(
+        [fields["simulation_id"], fields["window"]]
+        + [T.StructField(c, fields[c].dataType) for c in ("t_start", "t_stop", "duration")]
+        + [T.StructField("n_trials", T.LongType(), False)]
+    )
+    return local_df(
+        windows.sparkSession,
+        [(*key, *bounds, len(trials - {None})) for key, (bounds, trials) in groups.items()],
+        schema,
     )
 
 

@@ -606,8 +606,9 @@ def bfs_hops(
         )
         dist = dist.unionAll(new)
         frontier = new
-        f_rows = new.count()
-        settled_rows += f_rows
+        if hop < max_hops:  # after the last hop no count is read
+            f_rows = new.count()
+            settled_rows += f_rows
     if layout is not None:
         # every hop's frontier is eagerly pinned, so the returned union
         # no longer references the layout
@@ -696,8 +697,9 @@ def shortest_paths(
             .agg(F.min("cost").alias("cost"))
             .localCheckpoint(eager=True)
         )
-        if bc:
-            # the frame only grows: past the bound it never fits again
+        if bc and i < rounds - 1:
+            # the frame only grows: past the bound it never fits again;
+            # after the last round no count is read
             d_rows = dist.count()
     if layout is not None:
         # each round's distance frame is eagerly pinned, so the result

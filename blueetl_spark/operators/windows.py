@@ -11,8 +11,9 @@ in several overlapping trials is duplicated into each.
 Spark-first design:
 
 - Window definitions are config-sized (a handful of rows per simulation), so
-  trial expansion happens driver-side into a plain list of rows →
-  ``createDataFrame`` crossed with the (tiny) distinct simulation list.
+  trial expansion and the cross with the simulation rows happen on the
+  driver, into one driver-resident ``LocalRelation`` (``session.local_df``):
+  building, validating and aggregating the table runs no Spark job.
 - Slicing is an **interval join**: equality on ``simulation_id`` plus two
   range predicates. The windows side is always broadcast, so at 100 TB the
   plan is a broadcast hash join on the equi key with the range conditions
@@ -27,6 +28,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from blueetl_spark.session import local_df
 
@@ -64,6 +66,31 @@ def _expand_window(name: str, cfg: dict[str, Any]) -> list[dict[str, Any]]:
     return rows
 
 
+#: the windows table's columns and types, every column nullable (as the
+#: columns derived from the simulations table are)
+_WINDOWS_TYPES = T.StructType(
+    [T.StructField(f.name, f.dataType) for f in schemas.WINDOWS_SCHEMA.fields]
+)
+
+
+def windows_table(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """Driver-resident windows frame over ``rows`` (tuples in
+    ``WINDOWS_SCHEMA`` column order).
+
+    The frame carries its global time envelope, the least
+    ``offset + t_start`` and the greatest ``offset + t_stop`` over the rows,
+    so :func:`time_bounds_filter` builds the scan predicate without a job.
+    An empty table carries none.
+    """
+    out = local_df(spark, rows, _WINDOWS_TYPES)
+    if rows:
+        out._blueetl_time_bounds = (
+            min(r[4] + r[5] for r in rows),
+            max(r[4] + r[6] for r in rows),
+        )
+    return out
+
+
 def materialize_windows(
     spark: SparkSession,
     windows_config: WindowsConfig,
@@ -72,6 +99,10 @@ def materialize_windows(
     dynamic_windows: list[str] | None = None,
 ) -> DataFrame:
     """Build the windows table: one row per (simulation, window, trial).
+
+    The rows are built on the driver, from the simulations table's rows
+    (a collect that runs no job when that table is driver-resident, as the
+    analysis pipeline's is) crossed with the expanded window definitions.
 
     ``dynamic_offsets`` maps simulation_id → extra offset (the output of
     onset detection, reference ``extract/windows.py:78-111``); omitted
@@ -85,76 +116,25 @@ def materialize_windows(
     defs: list[dict[str, Any]] = []
     for name, cfg in windows_config.items():
         defs.extend(_expand_window(name, cfg))
-    sims = simulations.select("simulation_id", "circuit_id").distinct()
-    if dynamic_offsets:
-        dyn = local_df(
-            spark,
-            [(int(k), float(v)) for k, v in dynamic_offsets.items()],
-            "simulation_id smallint, dynamic_offset double",
-        )
-        sims = sims.join(F.broadcast(dyn), "simulation_id", "left").na.fill(
-            {"dynamic_offset": 0.0}
-        )
-    else:
-        sims = sims.withColumn("dynamic_offset", F.lit(0.0))
-    defs_df = local_df(
-        spark,
-        [tuple(d[k] for k in (
-            "window", "trial", "initial_offset", "step_offset", "t_start",
-            "t_stop", "t_step", "duration", "window_type")) for d in defs],
-        "window string, trial smallint, initial_offset double, "
-        "step_offset double, t_start double, t_stop double, t_step double, "
-        "duration double, window_type string",
+    sims = dict.fromkeys(
+        tuple(r) for r in simulations.select("simulation_id", "circuit_id").collect()
     )
-    applies = (
-        F.lit(True)
-        if dynamic_windows is None
-        else F.col("window").isin(list(dynamic_windows))
-    )
-    out = (
-        sims.crossJoin(F.broadcast(defs_df))
-        .withColumn(
-            "offset",
-            F.col("initial_offset")
-            + F.when(applies, F.col("dynamic_offset")).otherwise(0.0)
-            + F.col("step_offset"),
+    # a missing or NaN offset counts as 0, as ``na.fill`` would make it
+    dyn = {int(k): float(v) for k, v in (dynamic_offsets or {}).items() if v == v}
+    rows = [
+        (
+            sim_id, circuit_id, d["window"], d["trial"],
+            d["initial_offset"]
+            + (dyn.get(sim_id, 0.0)
+               if dynamic_windows is None or d["window"] in dynamic_windows
+               else 0.0)
+            + d["step_offset"],
+            d["t_start"], d["t_stop"], d["t_step"], d["duration"], d["window_type"],
         )
-        .select(
-            "simulation_id",
-            "circuit_id",
-            "window",
-            "trial",
-            "offset",
-            "t_start",
-            "t_stop",
-            "t_step",
-            "duration",
-            "window_type",
-        )
-    )
-    out = schemas.ensure_schema(out, schemas.WINDOWS_SCHEMA)
-    # The global time envelope is fully determined by driver-side config, so
-    # stash it on the DataFrame: time_bounds_filter can then build the scan
-    # predicate without running a Spark job at plan-construction time.
-    dyn = list((dynamic_offsets or {}).values()) or [0.0]
-    static = [d["initial_offset"] + d["step_offset"] for d in defs]
-
-    def _dyn_for(d: dict) -> list[float]:
-        if dynamic_windows is not None and d["window"] not in dynamic_windows:
-            return [0.0]
-        return dyn
-
-    out._blueetl_time_bounds = (
-        min(
-            s + min(_dyn_for(d) + [0.0]) + d["t_start"]
-            for s, d in zip(static, defs)
-        ),
-        max(
-            s + max(_dyn_for(d) + [0.0]) + d["t_stop"]
-            for s, d in zip(static, defs)
-        ),
-    )
-    return out
+        for sim_id, circuit_id in sims
+        for d in defs
+    ]
+    return windows_table(spark, rows)
 
 
 def validate_windows(windows: DataFrame) -> None:
@@ -164,36 +144,29 @@ def validate_windows(windows: DataFrame) -> None:
     1. all trials of a (simulation, window) share t_start/t_stop/duration;
     2. trial ids are exactly 0..n−1 per (simulation, window).
 
-    One aggregation job over the (config-sized) windows table; raises
+    The rows are checked on the driver: the table is config-sized, and
+    collecting a driver-resident one runs no job. Raises
     :class:`blueetl_spark.schemas.SchemaError` naming the offending
     windows. (Canonical implementation — ``schemas.validate_windows``
     delegates here.)
     """
-    bad = (
-        windows.groupBy("simulation_id", "window")
-        .agg(
-            F.countDistinct("t_start").alias("n_start"),
-            F.countDistinct("t_stop").alias("n_stop"),
-            F.countDistinct("duration").alias("n_dur"),
-            F.count("trial").alias("n_trials"),
-            F.countDistinct("trial").alias("n_distinct_trials"),
-            F.min("trial").alias("min_trial"),
-            F.max("trial").alias("max_trial"),
-        )
-        .filter(
-            (F.col("n_start") > 1)
-            | (F.col("n_stop") > 1)
-            | (F.col("n_dur") > 1)
-            | (F.col("min_trial") != 0)
-            | (F.col("max_trial") != F.col("n_trials") - 1)
-            | (F.col("n_distinct_trials") != F.col("n_trials"))
-        )
-        .collect()
-    )
+    groups: dict[tuple, list] = {}
+    for r in windows.select(
+        "simulation_id", "window", "trial", "t_start", "t_stop", "duration"
+    ).collect():
+        groups.setdefault((r.simulation_id, r.window), []).append(r)
+
+    def consistent(rows: list) -> bool:
+        # nulls are skipped, as Spark's count and countDistinct skip them
+        for col in ("t_start", "t_stop", "duration"):
+            if len({r[col] for r in rows if r[col] is not None}) > 1:
+                return False
+        trials = sorted(r.trial for r in rows if r.trial is not None)
+        return trials == list(range(len(trials)))
+
+    bad = [key for key, rows in groups.items() if not consistent(rows)]
     if bad:
-        details = ", ".join(
-            f"(sim={r.simulation_id}, window={r.window})" for r in bad
-        )
+        details = ", ".join(f"(sim={sim}, window={w})" for sim, w in bad)
         raise schemas.SchemaError(f"inconsistent windows: {details}")
 
 

@@ -23,15 +23,18 @@ Differences by design (SURVEY §7 hard-parts):
   ``load`` hands it to the reader: reopening a cached table starts no
   parquet schema-inference job (meta written without a schema still loads,
   by inference).
+- The config-sized tables (``DRIVER_TABLES``: one row per run, per
+  (circuit, class), per (simulation, window, trial)) load driver-resident:
+  pyarrow reads their parquet on the driver and ``session.local_df`` makes
+  a ``LocalRelation`` of the rows, under the pinned schema made nullable
+  (as Spark's parquet reader makes it). Filtering and collecting them runs
+  no Spark job, so a coordinate subfilter resolves against the cached
+  simulations table on the driver, once per fetch, at no job cost.
 - It also records the frame's ``_blueetl_*`` attributes (driver-side facts
   such as the windows table's ``_blueetl_time_bounds``), and every frame
   ``load`` or ``fetch`` returns carries them again. A refiltered frame
   keeps them too: its rows are a subset, so the recorded time bounds
   still enclose them.
-- A coordinate subfilter resolved against the cached simulations table is
-  memoized per (filter, id column), so fetching N feature tables through
-  one subfilter collects the surviving ids once; dumping or deleting
-  ``simulations`` clears the memo.
 """
 
 from __future__ import annotations
@@ -46,9 +49,10 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 from blueetl_spark.functions.qdsl import Query, compile_query, is_subfilter
+from blueetl_spark.session import local_df
 
 # extraction DAG order: invalidating one name invalidates all after it
 DEPENDENCY_ORDER = [
@@ -58,6 +62,8 @@ DEPENDENCY_ORDER = [
     "windows",
     "report",
 ]
+# config-sized tables, which ``load`` returns driver-resident
+DRIVER_TABLES = ("simulations", "neuron_classes", "windows")
 
 
 def _query_keys(query: Query) -> set[str]:
@@ -76,6 +82,34 @@ def checksum(obj: Any) -> str:
     """blake2b of the sorted-key JSON encoding (config identity)."""
     payload = json.dumps(obj, sort_keys=True, default=str).encode()
     return hashlib.blake2b(payload, digest_size=16).hexdigest()
+
+
+def _nullable(t: Any) -> Any:
+    """JSON data type ``t`` with every field, element and map value
+    nullable: what Spark's parquet reader makes of a given schema."""
+    if not isinstance(t, dict):
+        return t
+    if t["type"] == "struct":
+        fields = [{**f, "nullable": True, "type": _nullable(f["type"])} for f in t["fields"]]
+        return {**t, "fields": fields}
+    if t["type"] == "array":
+        return {**t, "elementType": _nullable(t["elementType"]), "containsNull": True}
+    if t["type"] == "map":
+        return {**t, "keyType": _nullable(t["keyType"]),
+                "valueType": _nullable(t["valueType"]), "valueContainsNull": True}
+    return t
+
+
+def _from_arrow(t: DataType, v: Any) -> Any:
+    """A pyarrow ``to_pylist`` value as ``createDataFrame`` takes it for the
+    Spark type ``t``: pyarrow returns a map as a list of key-value pairs."""
+    if v is None:
+        return v
+    if isinstance(t, MapType):
+        return {_from_arrow(t.keyType, k): _from_arrow(t.valueType, x) for k, x in v}
+    if isinstance(t, ArrayType):
+        return [_from_arrow(t.elementType, x) for x in v]
+    return v
 
 
 def _with_attrs(df: DataFrame, meta: dict[str, Any]) -> DataFrame:
@@ -98,8 +132,6 @@ class CacheManager:
         self.spark = spark
         self.path = Path(path)
         self.readonly = readonly
-        # (simulations written_at, filter checksum, id column) -> ids
-        self._resolved: dict[tuple[Any, str, str], list[Any]] = {}
         if not readonly:
             self.path.mkdir(parents=True, exist_ok=True)
 
@@ -128,10 +160,19 @@ class CacheManager:
 
     def load(self, name: str) -> DataFrame:
         meta = self.get_meta(name) or {}
-        reader = self.spark.read
-        if meta.get("schema") is not None:  # pinned: no schema-inference job
-            reader = reader.schema(StructType.fromJson(meta["schema"]))
-        return _with_attrs(reader.parquet(str(self._data_path(name))), meta)
+        path = str(self._data_path(name))
+        if meta.get("schema") is None:  # written unpinned: infer
+            return _with_attrs(self.spark.read.parquet(path), meta)
+        schema = StructType.fromJson(_nullable(meta["schema"]))
+        if name not in DRIVER_TABLES:  # pinned: no schema-inference job
+            return _with_attrs(self.spark.read.schema(schema).parquet(path), meta)
+        import pyarrow.parquet as pq
+
+        rows = [
+            tuple(_from_arrow(f.dataType, r[f.name]) for f in schema.fields)
+            for r in pq.read_table(path, columns=schema.fieldNames()).to_pylist()
+        ]
+        return _with_attrs(local_df(self.spark, rows, schema), meta)
 
     def dump(
         self,
@@ -172,8 +213,6 @@ class CacheManager:
             "schema": df.schema.jsonValue(),
             "attrs": {k: v for k, v in vars(df).items() if k.startswith("_blueetl_")},
         }
-        if name == "simulations":
-            self._resolved.clear()
         tmp_meta = self.path / f".{name}.meta.tmp-{os.getpid()}"
         tmp_meta.write_text(json.dumps(meta, indent=1, default=str))
         os.replace(tmp_meta, self._meta_path(name))
@@ -181,8 +220,6 @@ class CacheManager:
     def delete(self, name: str) -> None:
         if self.readonly:
             raise PermissionError(f"cache at {self.path} is readonly")
-        if name == "simulations":
-            self._resolved.clear()
         data = self._data_path(name)
         if data.exists():
             shutil.rmtree(data)
@@ -257,10 +294,10 @@ class CacheManager:
 
         Applies ``requested`` to the cached simulations table (where campaign
         coordinate columns live) and returns ``(id_column, ids)`` to filter
-        the frame with. The id set is campaign-sized (tens to thousands), so
-        an ``isin`` literal keeps the refilter pushdown-friendly; it is
-        collected once per (simulations dump, filter, id column). Returns
-        None when resolution is unsound/impossible.
+        the frame with. The table is driver-resident, so this runs no job;
+        the id set is campaign-sized (tens to thousands), so an ``isin``
+        literal keeps the refilter pushdown-friendly. Returns None when
+        resolution is unsound/impossible.
         """
         meta = self.get_meta("simulations")
         if meta is None or not self._data_path("simulations").exists():
@@ -271,14 +308,8 @@ class CacheManager:
         keys = [c for c in filter_columns if c in sims.columns and c in frame_columns]
         if not keys:
             return None
-        key = keys[0]
-        memo = (meta["written_at"], checksum(requested), key)
-        if memo not in self._resolved:
-            rows = (
-                sims.filter(compile_query(requested)).select(key).distinct().collect()
-            )
-            self._resolved[memo] = [r[0] for r in rows]
-        return key, self._resolved[memo]
+        rows = sims.filter(compile_query(requested)).select(keys[0]).collect()
+        return keys[0], list(dict.fromkeys(r[0] for r in rows))
 
 
 class CachedPipeline:

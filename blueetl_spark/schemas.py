@@ -143,9 +143,10 @@ def ensure_schema(
 
 def validate_windows(windows: DataFrame) -> None:
     """Semantic checks on the windows table (A5/A6) — delegates to the
-    canonical single-aggregation implementation in
-    :func:`blueetl_spark.operators.windows.validate_windows` (late import:
-    operators.windows imports this module at load time)."""
+    canonical implementation in
+    :func:`blueetl_spark.operators.windows.validate_windows`, which checks
+    the collected rows on the driver (no job for a driver-resident table;
+    late import: operators.windows imports this module at load time)."""
     from blueetl_spark.operators.windows import validate_windows as _validate
 
     _validate(windows)

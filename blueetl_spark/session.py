@@ -81,8 +81,12 @@ def local_df(spark: SparkSession, rows, ddl: str):
     Python-worker round trip (~0.3 s for scalar rows, 5+ s for
     array-typed rows, measured on this box — it was the dominant cost of
     the IVF index build). Routing through a pandas DataFrame instead
-    yields an Arrow-backed JVM LocalRelation: no Python at execution
-    time, and Catalyst can fold/broadcast it like any literal table.
+    yields an Arrow-backed JVM ``LocalRelation`` while
+    ``spark.sql.execution.arrow.pyspark.enabled`` is true (``get_spark``
+    sets it): no Python at execution time, Catalyst can fold/broadcast it
+    like any literal table, and a filter or projection plus ``collect``
+    over it runs no Spark job at all. With Arrow off the frame is a
+    ``LogicalRDD`` instead, and every such collect runs a job.
 
     Rows are kept as dtype=object so None survives into nullable columns
     of any type; the explicit DDL fixes the schema (pandas would infer

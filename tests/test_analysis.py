@@ -519,3 +519,107 @@ def test_warm_requery_jobs_do_not_grow_with_features(spark, data, tmp_path, coun
         assert len(feats) == n
         assert set(feats["by_gid"].toPandas().simulation_id) == {1}
     assert jobs[2] == jobs[5]
+
+
+def test_cold_campaign_job_budget(spark, data, tmp_path, count_jobs, monkeypatch):
+    """Job budget of a cold cached run and its re-query: the config-sized
+    tables are driver-resident, so the windows step runs at most its cache
+    write, ``apply_filter`` and a coordinate-subfilter fetch run none, and
+    the report's events scan keeps only the selected simulations."""
+    from pyspark.sql import functions as F
+
+    from blueetl_spark.plans.cache import CacheManager
+
+    nodes, events = data
+    # four simulations, two of them selected (an IN list, not an equality)
+    events.withColumn("simulation_id", (F.col("simulation_id") * 2 + F.col("gid") % 2)
+                      .cast("smallint")).write.parquet(str(tmp_path / "events"))
+    events4 = spark.read.parquet(str(tmp_path / "events"))
+    cfg = _with_features(
+        [{"function": "blueetl_spark.features.by_gid"}, *BUILTINS],
+        simulations_filter={"seed": [1, 3]},
+    )
+    cfg["simulation_campaign"] = {
+        "data": [{"simulation_path": f"/sim{i}", "seed": i} for i in range(4)]
+    }
+    plans = {}
+    dump = CacheManager.dump
+
+    def recording_dump(self, name, df, *args, **kwargs):
+        plans[name] = df._jdf.queryExecution().executedPlan().toString()
+        return dump(self, name, df, *args, **kwargs)
+
+    monkeypatch.setattr(CacheManager, "dump", recording_dump)
+    cache = tmp_path / "c"
+    a = MultiAnalyzer(spark, cfg, nodes, events4, cache_path=cache).spikes
+    a.simulations
+    _, windows_jobs = count_jobs(lambda: a.windows)
+    assert windows_jobs <= 1
+    a.calculate_features()
+    scan = next(line for line in plans["report"].splitlines() if "PushedFilters" in line)
+    assert "In(simulation_id, [1,3])" in scan
+
+    requery = MultiAnalyzer(
+        spark, {**cfg, "simulations_filter": {"seed": [3]}}, nodes, events4,
+        cache_path=cache,
+    ).spikes
+    view, filter_jobs = count_jobs(lambda: requery.apply_filter({"seed": [3]}))
+    feats, fetch_jobs = count_jobs(requery.calculate_features)
+    assert filter_jobs == fetch_jobs == 0
+    assert set(view.calculate_features()["by_gid"].toPandas().simulation_id) == {3}
+    assert set(feats["latency"].toPandas().simulation_id) == {3}
+
+
+def _degenerate_config(case: str) -> dict:
+    import copy
+
+    cfg = copy.deepcopy(CONFIG)
+    spikes = cfg["analysis"]["spikes"]
+    spikes["features"] = copy.deepcopy([BNAC_MULTI, *BUILTINS])
+    windows = spikes["extraction"]["windows"]
+    if case == "empty_filter":
+        cfg["simulations_filter"] = {"seed": 99}
+    elif case == "window_ref":
+        cfg["analysis"]["other"] = {"extraction": {
+            "neuron_classes": {"all": {"query": {}}},
+            "windows": {"w1": {"bounds": [10.0, 30.0], "n_trials": 2,
+                               "trial_steps_value": 30.0}},
+        }}
+        windows["w3"] = "other.extraction.windows.w1"
+    elif case == "onset":
+        windows["w3"] = {
+            "bounds": [0.0, 20.0],
+            "trial_steps": {"bounds": [0.0, 100.0], "bin_size": 1.0, "sigma": 2.0,
+                            "std_multiple": 1.0, "pre_fraction": 0.3},
+        }
+    elif case == "conditions":
+        cfg["simulation_campaign"]["data"] = [
+            {"simulation_path": "/sim0", "seed": 1, "flag": True, "label": "a",
+             "opt": None},
+            {"simulation_path": "/sim1", "seed": 2, "flag": False, "label": None,
+             "opt": 1.5},
+        ]
+        cfg["simulations_filter"] = {"flag": True}
+    return cfg
+
+
+@pytest.mark.parametrize("case", ["empty_filter", "window_ref", "onset", "conditions"])
+def test_degenerate_campaigns_match_uncached(spark, data, tmp_path, case):
+    """Driver-resident tables served from the cache, and from a readonly
+    cache, equal the uncached run in rows and schema: a filter selecting no
+    simulation, a window copied from another analysis, an onset window, and
+    bool, string and null campaign condition values."""
+    nodes, events = data
+    cfg = _degenerate_config(case)
+
+    def tables(**kwargs) -> dict:
+        a = MultiAnalyzer(spark, cfg, nodes, events, **kwargs).spikes
+        return {**a.extract(), **{f"features_{k}": v
+                                  for k, v in a.calculate_features().items()}}
+
+    uncached = tables()
+    assert (uncached["simulations"].count() == 0) == (case == "empty_filter")
+    _assert_same_tables(tables(cache_path=tmp_path / "c"), uncached)
+    _assert_same_tables(
+        tables(cache_path=tmp_path / "c", readonly_cache=True), uncached
+    )

@@ -147,11 +147,12 @@ def test_meta_without_schema_still_loads(spark, cache):
     assert sorted(r.simulation_id for r in got.collect()) == [1, 2]
 
 
-def test_coordinate_resolution_is_memoized_until_simulations_redump(
+def test_coordinate_resolution_runs_no_job_and_follows_simulations_redump(
     spark, cache, count_jobs
 ):
-    """One subfilter resolves against simulations once for any number of
-    frames; re-dumping simulations forgets the resolved ids."""
+    """A coordinate subfilter resolves against the driver-resident
+    simulations table: no fetch runs a Spark job, and a re-dumped
+    simulations table is what the next fetch resolves against."""
     cs = checksum({"a": 1})
     sims = spark.createDataFrame(
         [(1, 0.1), (2, 0.1), (3, 0.2)], "simulation_id int, seed double"
@@ -159,12 +160,13 @@ def test_coordinate_resolution_is_memoized_until_simulations_redump(
     cache.dump("simulations", sims, cs, simulations_filter={})
     for name in ("features_a", "features_b"):
         cache.dump(name, _df(spark, [1, 2, 3]), cs, simulations_filter={})
-    _, jobs_first = count_jobs(lambda: cache.fetch("features_a", cs, {"seed": 0.1}))
+    first, jobs_first = count_jobs(lambda: cache.fetch("features_a", cs, {"seed": 0.1}))
     second, jobs_second = count_jobs(
         lambda: cache.fetch("features_b", cs, {"seed": 0.1})
     )
-    assert jobs_first > 0 and jobs_second == 0
-    assert sorted(r.simulation_id for r in second.collect()) == [1, 2]
+    assert jobs_first == jobs_second == 0
+    for got in (first, second):
+        assert sorted(r.simulation_id for r in got.collect()) == [1, 2]
 
     sims2 = spark.createDataFrame(
         [(1, 0.2), (2, 0.1), (3, 0.1)], "simulation_id int, seed double"
@@ -198,3 +200,24 @@ def test_get_or_compute_carries_driver_side_attributes(spark, tmp_path):
     assert pipe.get_or_compute("windows", compute)._blueetl_time_bounds == (0.0, 5.0)
     hit = pipe.get_or_compute("windows", lambda: _df(spark, [1]))
     assert hit._blueetl_time_bounds == (0.0, 5.0)
+
+
+def test_driver_tables_load_the_rows_the_parquet_reader_reads(spark, cache, count_jobs):
+    """A config-sized table loads driver-resident, with the rows and schema
+    Spark's parquet reader gives, for date, timestamp, array and map
+    condition columns too; collecting it runs no job."""
+    import datetime
+
+    from blueetl_spark.sources.campaign import SimulationCampaign
+
+    sims = SimulationCampaign([
+        {"simulation_path": "/a", "d": datetime.date(2020, 1, 1),
+         "ts": datetime.datetime(2020, 1, 1, 12, 30), "l": [1, None], "m": {"x": 1}},
+        {"simulation_path": "/b", "d": None, "ts": None, "l": None, "m": {"y": 2}},
+    ]).to_simulations_df(spark)
+    cache.dump("simulations", sims, checksum({}))
+    read = spark.read.parquet(str(cache.path / "simulations.parquet"))
+    got, jobs = count_jobs(lambda: cache.load("simulations").collect())
+    assert jobs == 0
+    assert cache.load("simulations").schema == read.schema
+    assert sorted(got) == sorted(read.collect())

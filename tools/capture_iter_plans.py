@@ -6,7 +6,8 @@ Hooks ``DataFrame.localCheckpoint`` to dump each checkpointed frame's
 plan (the round's full plan, formed immediately before the pin) while
 the REAL operator runs on a small graph, forced onto the shuffled
 (above-the-broadcast-bound) path with the edge layout. Plan SHAPE is
-size-independent here: the broadcast bounds are 0, not size estimates.
+size-independent here: the broadcast bounds are 0, not size estimates,
+and the session turns the planner's automatic broadcast off.
 
     python tools/capture_iter_plans.py <pagerank|bfs_hops|shortest_paths|components>
 
@@ -35,7 +36,15 @@ def main() -> int:
         os.environ.get("SPARK_GRAFT_PLANS_DIR", "r14"),
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name=f"capture_iter_{op}")
+    # No automatic broadcast: the planner would otherwise broadcast the
+    # cached edge side whenever its in-memory statistics fall under
+    # autoBroadcastJoinThreshold, which is not the shape a 100 TB graph
+    # runs (there the edge side never fits). With it off, the captured
+    # shape does not depend on CAPTURE_EDGES.
+    spark = get_spark(
+        app_name=f"capture_iter_{op}",
+        extra_conf={"spark.sql.autoBroadcastJoinThreshold": "-1"},
+    )
 
     dumps: list[str] = []
     orig = CDF.localCheckpoint
@@ -47,10 +56,6 @@ def main() -> int:
         dumps.append(self._jdf.queryExecution().explainString(m))
         return orig(self, eager)
 
-    # Big enough that the persisted edge cache's (accurate) statistics
-    # exceed autoBroadcastJoinThreshold — at toy sizes the planner
-    # broadcasts the cached EDGE side outright, which is not the shape
-    # a 100 TB graph runs (there the edge side never fits).
     n_edges = int(os.environ.get("CAPTURE_EDGES", 2_000_000))
     n_nodes = max(800, n_edges // 10)
     e = spark.range(n_edges).select(
