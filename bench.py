@@ -1,5 +1,5 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) and prints ONE JSON line.
+"""Benchmark harness: runs the headline queries (``queries.HEADLINE``) at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 test data) and prints ONE JSON line.
 
 Each query is materialized with the no-op sink (full execution, no driver
 collect). Timings are wall-clock per query; ``value`` is the total.
@@ -15,175 +15,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-HEADLINE = [
-    "report_extract",
-    "event_rates",
-    "histogram",
-    "feature_by_gid",
-    "isi_stats",
-    "correlation_pairs",
-    "complexity_pdf",
-    "psd_welch",
-    "soma_mean_value",
-    "pricing_summary",
-    "revenue_by_nation",
-    "orders_topk_per_customer",
-    "multi_sim_rates",
-    "dedup_exact",
-    "dedup_embedding",
-    "curation_pipeline",
-    "token_stats",
-    "jaccard_pairs",
-    "minhash_lsh",
-    "simhash",
-    "knn_bruteforce",
-    "knn_lsh",
-    "knn_ivf_fixed",
-    "knn_pq",
-    "dedup_components",
-    "tf_idf",
-    "asof_purchase",
-    "sessionization",
-    "value_quantiles",
-    "pii_scrub",
-    "hard_negatives",
-    "temperature_mixture",
-    "profile_orders",
-    "corpus_diff",
-    # round-5 additions
-    "profile_shards_merge",
-    "language_id",
-    "semantic_decontaminate",
-    "stratified_sample",
-    "chunk_documents",
-    "simhash_candidates",
-    # round-7 additions
-    "semdedup_fixed",
-    "dedup_spans",
-    "simhash_band_stats",
-    # round-7 late additions (retrieval scoring / LM filter / DSIR /
-    # linear scorer / link graph)
-    "bm25",
-    "lm_perplexity",
-    "dsir_resample",
-    "classifier_score",
-    "gopher_rules",
-    "pagerank_fixed",
-    "decontaminate_bloom",
-    "fuzzy_decontaminate",
-    "edit_distance_pairs",
-    "phrase_search",
-    "bm25_search",
-    # round-7 SQL-surface + sketch additions
-    "rollup_revenue",
-    "order_gaps",
-    "rolling_value_stats",
-    "value_deciles",
-    "histogram_sketch_merge",
-    "pagerank_personalized",
-    "triangle_counts",
-    "winsorize_stats",
-    "train_split",
-    "sole_fault_suppliers",
-    "repeat_customers_setops",
-    "part_unpivot",
-    "small_quantity_revenue",
-    "props_json_stats",
-    "robust_outliers",
-    "ccnet_buckets",
-    "clustering_coeff",
-    "scd2_latest_order",
-    "session_window_overlap",
-    "funnel_conversion",
-    "retention_cohorts",
-    "pareto_parts",
-    "ohlc_events",
-    "ohlc_shards_merge",
-    "market_share",
-    "quality_checks",
-    "embedding_covariance",
-    "embedding_projection",
-    "leakage_split",
-    "value_trend",
-    "basket_rules",
-    "funnel_gaps",
-    "event_transitions",
-    "event_trigrams",
-    "k_core_fixed",
-    "cusum_changepoint",
-    "contamination_ratio",
-    "containment_md5",
-    "tree_closure",
-    "pmi_collocations",
-    "grouping_sets_margin",
-    "cms_estimates",
-    "key_skew",
-    "weighted_group_sample",
-    "ks_drift",
-    # round-10 additions
-    "ks_drift_binned",
-    "skewed_join_salted",
-    "image_near_dup",
-    "heavy_hitters_shards",
-    "embedding_drift",
-    "pack_sequences",
-    "psi_drift",
-    "ann_recall_lsh",
-    "cdc_snapshot",
-    "ewma_levels",
-    "jaccard_prefix",
-    "mutual_info",
-    "touch_attribution",
-    "benford_prices",
-    "theil_sen_trend",
-    "gini_balances",
-    "rfm_segments",
-    "compact_states",
-    # round-10 continuation gates
-    "mann_whitney",
-    "chi2_independence",
-    "spearman_corr",
-    "audio_energy",
-    "bfs_hops",
-    "kaplan_meier",
-    "score_calibration",
-    "score_auc",
-    "seasonal_anomalies",
-    "incremental_rollup",
-    "log_rank",
-    "shortest_paths",
-    "join_size_estimate",
-    "cohort_ltv",
-    "video_scene_cuts",
-    "grouped_ols2",
-    # round-11 additions
-    "theil_sen_windowed",
-    "hll_distinct",
-    "lang_id_kappa",
-    "cuped_experiment",
-    "target_encode",
-    "jackknife_rpo",
-    "bloom_join_revenue",
-    # round-12 additions
-    "fdr_correction",
-    "nelson_aalen",
-    "conformal_thresholds",
-    "qnorm_shards",
-    "jsd_shards",
-    "auc_delong",
-    "k_anonymity",
-    "isotonic_curve",
-    "mmr_diverse",
-    # round-13 additions
-    "ranking_eval_orders",
-    "retrieval_eval_ann",
-    "retrieval_eval_summary",
-    "rrf_orders",
-    "fleiss_agreement",
-    "krippendorff_agreement",
-    "rbo_rankings",
-]
 
 
 def _calib_probe(spark) -> float:
@@ -834,7 +665,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    from blueetl_spark.queries import QUERIES
+    from blueetl_spark.queries import HEADLINE, QUERIES
     from blueetl_spark.session import get_spark
 
     n_events = int(os.environ.get("SPARK_GRAFT_STRESS_EVENTS", 20_000_000))

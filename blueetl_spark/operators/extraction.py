@@ -68,8 +68,6 @@ def extract_neurons(
     :func:`dense_index` variant — same output, no single-task per-class
     sort; use it when any one class exceeds ~10⁸ gids.
     """
-    names = list(neuron_classes_config)
-
     def class_pred(cfg: dict[str, Any]):
         pred = compile_query(cfg.get("query") or {})
         ns_name = cfg.get("node_set")
@@ -120,7 +118,6 @@ def extract_neurons(
         "neuron_class_index",
         two_phase=two_phase_index,
     ).orderBy("circuit_id", "neuron_class", "gid")
-    _ = names  # preserve config order for future canonicalization needs
     return schemas.ensure_schema(out, schemas.NEURONS_SCHEMA)
 
 
@@ -266,11 +263,12 @@ def dense_index(
     )
 
 
+# Phase-1 survivors per limited class, as a multiple of its limit.
+_OVERSAMPLE = 2.0
+
+
 def _sample_limits(
-    tagged: DataFrame,
-    limits: dict[str, int],
-    seed: int,
-    oversample: float = 2.0,
+    tagged: DataFrame, limits: dict[str, int], seed: int
 ) -> DataFrame:
     """Exact-size uniform sample per (circuit, class) with a bounded sort.
 
@@ -278,9 +276,9 @@ def _sample_limits(
     rand)`` on *all* rows — funnels every class through one task's sort:
     fine at 10⁵ gids, a straggler at 10⁹. Two-phase version:
 
-    1. Bernoulli pre-filter with p ≈ oversample·limit/count (class counts
+    1. Bernoulli pre-filter with p ≈ _OVERSAMPLE·limit/count (class counts
        from one aggregate, collected — there are only a handful of
-       classes), so the rank window sees ~oversample·limit rows per class
+       classes), so the rank window sees ~_OVERSAMPLE·limit rows per class
        instead of the whole class.
     2. Exact ``row_number ≤ limit`` on the survivors, ordered by a second
        independent ``rand`` — uniform because phase 1 is symmetric across
@@ -302,7 +300,7 @@ def _sample_limits(
         .collect()
     }
     p_rows = [
-        (int(cid), cls, min(1.0, oversample * limits[cls] / n) if n else 1.0)
+        (int(cid), cls, min(1.0, _OVERSAMPLE * limits[cls] / n) if n else 1.0)
         for (cid, cls), n in counts.items()
     ]
     sample_w = Window.partitionBy("circuit_id", "neuron_class").orderBy(
@@ -337,7 +335,7 @@ def _sample_limits(
     short = [
         (cid, cls)
         for (cid, cls), n in counts.items()
-        if min(1.0, oversample * limits[cls] / n if n else 1.0) < 1.0
+        if min(1.0, _OVERSAMPLE * limits[cls] / n if n else 1.0) < 1.0
     ]
     if short:
         got = {
@@ -422,7 +420,6 @@ def extract_report(
     time_col: str = "time",
     gid_col: str = "gid",
     value_cols: list[str] | None = None,
-    broadcast_neurons: bool | None = None,
 ) -> DataFrame:
     """Windowed, class-annotated event table (= the reference's ``report``).
 
@@ -477,11 +474,9 @@ def extract_report(
     # projection never outputs it, and every extra byte on the build side
     # rides through the widest join in the pipeline.
     n = neurons.select("circuit_id", F.col("gid"), "neuron_class")
-    if broadcast_neurons is None:
-        broadcast_neurons = True  # class-filtered neuron lists are small vs events
-    right = F.broadcast(n) if broadcast_neurons else n
     ev = events.withColumnRenamed(gid_col, "gid") if gid_col != "gid" else events
-    classified = ev.join(right, ["circuit_id", "gid"], "inner")
+    # class-filtered neuron lists are small against events: broadcast them
+    classified = ev.join(F.broadcast(n), ["circuit_id", "gid"], "inner")
 
     sliced = slice_events(classified, windows, time_col=time_col)
     cols = [

@@ -14,6 +14,8 @@ touching the transformations.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -274,6 +276,34 @@ def streaming_slice_events(
     return slice_events(events, windows, time_col=time_col, join_keys=join_keys)
 
 
+def _start_shard_stream(
+    stream_df: DataFrame,
+    shard: Callable[[DataFrame, str], DataFrame],
+    shard_path: str,
+    checkpoint: str,
+    batch_prefix: str,
+    trigger: dict | None,
+):
+    """Start the ``foreachBatch`` query shared by the shard writers: each
+    non-empty micro-batch appends ``shard(batch_df, batch_id)`` to
+    ``shard_path`` as one file, with ``batch_id`` =
+    ``{batch_prefix}-{epoch_id}`` (a replayed epoch reuses its id, which
+    is what the readers dedup on). Returns the started StreamingQuery."""
+
+    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        out = shard(batch_df, f"{batch_prefix}-{epoch_id}")
+        out.coalesce(1).write.mode("append").parquet(shard_path)
+
+    writer = stream_df.writeStream.foreachBatch(write_batch).option(
+        "checkpointLocation", checkpoint
+    )
+    if trigger:
+        writer = writer.trigger(**trigger)
+    return writer.start()
+
+
 def streaming_profile_shards(
     stream_df: DataFrame,
     shard_path: str,
@@ -311,20 +341,13 @@ def streaming_profile_shards(
     """
     from blueetl_spark.operators.profile import profile_shard
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        profile_shard(
-            batch_df, f"{batch_prefix}-{epoch_id}", columns=columns, lgk=lgk
-        ).coalesce(1).write.mode("append").parquet(shard_path)
-
-    writer = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
+    return _start_shard_stream(
+        stream_df,
+        lambda batch_df, batch_id: profile_shard(
+            batch_df, batch_id, columns=columns, lgk=lgk
+        ),
+        shard_path, checkpoint, batch_prefix, trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def streaming_histogram_shards(
@@ -350,21 +373,13 @@ def streaming_histogram_shards(
     """
     from blueetl_spark.operators.profile import histogram_shard
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        histogram_shard(
-            batch_df, value_col, lo, hi, n_bins,
-            batch_id=f"{batch_prefix}-{epoch_id}",
-        ).coalesce(1).write.mode("append").parquet(shard_path)
-
-    writer = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
+    return _start_shard_stream(
+        stream_df,
+        lambda batch_df, batch_id: histogram_shard(
+            batch_df, value_col, lo, hi, n_bins, batch_id=batch_id
+        ),
+        shard_path, checkpoint, batch_prefix, trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def streaming_ohlc_shards(
@@ -400,21 +415,14 @@ def streaming_ohlc_shards(
     """
     from blueetl_spark.operators.timeseries import ohlc_shard
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ohlc_shard(
+    return _start_shard_stream(
+        stream_df,
+        lambda batch_df, batch_id: ohlc_shard(
             batch_df, time_col, value_col, bucket_width, by=by,
-            tie_col=tie_col, batch_id=f"{batch_prefix}-{epoch_id}",
-        ).coalesce(1).write.mode("append").parquet(shard_path)
-
-    writer = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
+            tie_col=tie_col, batch_id=batch_id,
+        ),
+        shard_path, checkpoint, batch_prefix, trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def streaming_cms_shards(
@@ -440,21 +448,13 @@ def streaming_cms_shards(
     """
     from blueetl_spark.operators.profile import cms_shard
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cms_shard(
-            batch_df, key_col, width, depth,
-            batch_id=f"{batch_prefix}-{epoch_id}", hash_fn=hash_fn,
-        ).coalesce(1).write.mode("append").parquet(shard_path)
-
-    writer = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
+    return _start_shard_stream(
+        stream_df,
+        lambda batch_df, batch_id: cms_shard(
+            batch_df, key_col, width, depth, batch_id=batch_id, hash_fn=hash_fn
+        ),
+        shard_path, checkpoint, batch_prefix, trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def streaming_hll_shards(
@@ -479,20 +479,13 @@ def streaming_hll_shards(
     """
     from blueetl_spark.operators.profile import hll_shard
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        hll_shard(
-            batch_df, key_col, batch_id=f"{batch_prefix}-{epoch_id}"
-        ).coalesce(1).write.mode("append").parquet(shard_path)
-
-    writer = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
+    return _start_shard_stream(
+        stream_df,
+        lambda batch_df, batch_id: hll_shard(
+            batch_df, key_col, batch_id=batch_id
+        ),
+        shard_path, checkpoint, batch_prefix, trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def streaming_topk_shards(
@@ -516,20 +509,13 @@ def streaming_topk_shards(
     """
     from blueetl_spark.operators.profile import topk_shard
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        topk_shard(
-            batch_df, key_col, m=m, batch_id=f"{batch_prefix}-{epoch_id}"
-        ).coalesce(1).write.mode("append").parquet(shard_path)
-
-    writer = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
+    return _start_shard_stream(
+        stream_df,
+        lambda batch_df, batch_id: topk_shard(
+            batch_df, key_col, m=m, batch_id=batch_id
+        ),
+        shard_path, checkpoint, batch_prefix, trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def streaming_psi_monitor(
@@ -567,25 +553,13 @@ def streaming_psi_monitor(
 
     ref = ref_df.persist()
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            psi_drift(ref, batch_df, value_col, by=list(by),
-                      buckets=buckets, eps=eps)
-            .withColumn("batch_id", F.lit(f"{batch_prefix}-{epoch_id}"))
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(shard_path)
-        )
-
-    writer = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
+    return _start_shard_stream(
+        stream_df,
+        lambda batch_df, batch_id: psi_drift(
+            ref, batch_df, value_col, by=list(by), buckets=buckets, eps=eps
+        ).withColumn("batch_id", F.lit(batch_id)),
+        shard_path, checkpoint, batch_prefix, trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def read_psi_timeline(spark, shard_path: str, by: tuple = ()) -> DataFrame:
@@ -687,28 +661,18 @@ def streaming_jsd_monitor(
         hash_fn=hash_fn, count_name="__na",
     ).persist()
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def shard(batch_df: DataFrame, batch_id: str) -> DataFrame:
         cb = jsd_bucket_counts(
             batch_df, key_col, by=list(by), n_buckets=n_buckets,
             hash_fn=hash_fn, count_name="__nb",
         )
-        (
-            js_divergence_counts(ref_counts, cb, by=list(by))
-            .withColumn("batch_id", F.lit(f"{batch_prefix}-{epoch_id}"))
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(shard_path)
+        return js_divergence_counts(ref_counts, cb, by=list(by)).withColumn(
+            "batch_id", F.lit(batch_id)
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
+    query = _start_shard_stream(
+        stream_df, shard, shard_path, checkpoint, batch_prefix, trigger
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    query = writer.start()
     _unpersist_on_termination(ref_df.sparkSession, query, ref_counts)
     return query
 

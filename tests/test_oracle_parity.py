@@ -11,10 +11,7 @@ gate).
 
 from __future__ import annotations
 
-
 import pytest
-
-GRADED_WINDOW = 50
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -23,10 +20,30 @@ TABLES = (
 
 
 def _ungraded_oracled() -> list[str]:
-    from blueetl_spark.queries import ORACLES, QUERIES
+    from blueetl_spark.queries import GRADED_COUNT, ORACLES, QUERIES
 
-    names = list(QUERIES)
-    return [n for n in names[GRADED_WINDOW:] if n in ORACLES]
+    return [n for n in list(QUERIES)[GRADED_COUNT:] if n in ORACLES]
+
+
+def test_registry_invariants():
+    """The gate table is the one registration site: names are unique,
+    every graded gate carries an oracle (the rows-only gates sit in the
+    tail), and the headline bench times only registered gates."""
+    from blueetl_spark.queries import (
+        GATES,
+        GRADED_COUNT,
+        HEADLINE,
+        ORACLES,
+        QUERIES,
+    )
+
+    names = [name for name, *_ in GATES]
+    assert len(names) == len(set(names)) == len(QUERIES)
+    assert list(QUERIES) == names
+    graded = names[:GRADED_COUNT]
+    assert len(graded) == GRADED_COUNT
+    assert [n for n in graded if n not in ORACLES] == []
+    assert set(HEADLINE) <= set(QUERIES)
 
 
 def _canon(df):

@@ -16,42 +16,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
+from bench import _calib_probe, _calib_probe_mc, _stress_barrier
 from blueetl_spark.queries import QUERIES
 from blueetl_spark.session import get_spark
-
-
-def calib(spark) -> float:
-    t0 = time.perf_counter()
-    spark.range(20_000_000).select(
-        F.pmod(F.xxhash64("id"), F.lit(1000)).alias("k")
-    ).groupBy("k").count().collect()
-    return round(time.perf_counter() - t0, 3)
-
-
-def calib_mc(spark) -> float:
-    """Parallel probe (one task per core): the single-core probe is
-    blind to multi-core co-tenant load (VERDICT r13 #1). ~0.13-0.18 s
-    idle at 32 cores on this box."""
-    cores = spark.sparkContext.defaultParallelism
-    t0 = time.perf_counter()
-    spark.range(0, cores * 8_000_000, 1, cores).select(
-        F.expr("bit_xor(xxhash64(id))")
-    ).collect()
-    return round(time.perf_counter() - t0, 3)
-
-
-def barrier(spark) -> None:
-    import gc
-
-    spark.catalog.clearCache()
-    gc.collect()
-    try:
-        spark.sparkContext._jvm.System.gc()
-    except Exception:  # noqa: BLE001
-        pass
-    time.sleep(0.5)
 
 
 def main() -> None:
@@ -72,14 +39,14 @@ def main() -> None:
     # one unmeasured warm-up run: codegen + shuffle-file setup are not
     # what the cross-round record measures (its min rides later passes)
     QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    barrier(spark)
+    _stress_barrier(spark)
 
     bar_mc = float(os.environ.get("PROBE_MC_BAR", 0.6))
     reps, skipped = [], 0
     t_start = time.perf_counter()
     while len(reps) < n_reps and time.perf_counter() - t_start < budget_s:
-        c = calib(spark)
-        cm = calib_mc(spark)
+        c = _calib_probe(spark)
+        cm = _calib_probe_mc(spark)
         if c > bar or cm > bar_mc:
             skipped += 1
             print(
@@ -95,7 +62,7 @@ def main() -> None:
                      "loadavg_1m": round(os.getloadavg()[0], 1)})
         print(f"# rep {len(reps)}: {dt}s at calib {c} / mc {cm}",
               file=sys.stderr, flush=True)
-        barrier(spark)
+        _stress_barrier(spark)
     out = {
         "query": name,
         "sf_dir": sf_dir,

@@ -19,29 +19,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import _calib_probe, _stress_barrier
 from blueetl_spark.session import get_spark
 
 N_EVENTS = 20_000_000
-
-
-def calib(spark) -> float:
-    t0 = time.perf_counter()
-    spark.range(20_000_000).select(
-        F.pmod(F.xxhash64("id"), F.lit(1000)).alias("k")
-    ).groupBy("k").count().collect()
-    return round(time.perf_counter() - t0, 3)
-
-
-def barrier(spark) -> None:
-    import gc
-
-    spark.catalog.clearCache()
-    gc.collect()
-    try:
-        spark.sparkContext._jvm.System.gc()
-    except Exception:  # noqa: BLE001
-        pass
-    time.sleep(0.5)
 
 
 def thunk_class_index(spark):
@@ -88,12 +69,12 @@ def main() -> None:
     }[name](spark)
 
     thunk()  # unmeasured warm-up (codegen; the record's min rides later reps)
-    barrier(spark)
+    _stress_barrier(spark)
 
     reps, skipped = [], 0
     t_start = time.perf_counter()
     while len(reps) < n_reps and time.perf_counter() - t_start < budget_s:
-        c = calib(spark)
+        c = _calib_probe(spark)
         if c > bar:
             skipped += 1
             print(f"# calib {c} > {bar}, waiting", file=sys.stderr, flush=True)
@@ -106,7 +87,7 @@ def main() -> None:
                      "loadavg_1m": round(os.getloadavg()[0], 1)})
         print(f"# rep {len(reps)}: {dt}s at calib {c}", file=sys.stderr,
               flush=True)
-        barrier(spark)
+        _stress_barrier(spark)
     print(json.dumps({
         "query": name,
         "calib_bar": bar,
