@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from blueetl_spark.operators.graph import laid_out
+from blueetl_spark.operators import graph
 from blueetl_spark.operators.text import (
     fingerprint,
     shingles,
@@ -1018,7 +1018,6 @@ def connected_components(
     max_iter: int = 25,
     assume_distinct_pairs: bool = False,
     max_driver_edges: int = 1_000_000,
-    broadcast_max_labels: int = 4_000_000,
 ) -> DataFrame:
     """Duplicate clusters from candidate pairs: (id, component) where the
     component label is the smallest id reachable through the pair graph.
@@ -1049,11 +1048,11 @@ def connected_components(
 
     ``nodes`` (optional) adds isolated documents as their own singleton
     components; without it only ids appearing in ``pairs`` are labeled.
-    Lineage discipline for the iteration: each round ends in an eager
-    ``localCheckpoint`` — the round's plan references the previous labels
-    three times, so an uncut lineage grows 3^k plan nodes by round k and
-    OOMs the driver in query planning long before the data is a problem
-    (see the in-loop comment for the measurement).
+    The rounds run on ``graph._rounds``: the round's plan references the
+    previous labels three times (propagate, jump, carry), so an uncut
+    lineage grows 3^k plan nodes by round k, and the driver OOMed in
+    query planning around round 5 (an 80-edge cyclic graph at 4 GB
+    heap; a cut every 6 rounds allowed 3^6 ≈ 729x growth).
 
     ``assume_distinct_pairs=True`` skips the edge-dedup shuffle — correct
     whenever the pair source already emits unique (id_a < id_b) pairs
@@ -1061,17 +1060,12 @@ def connected_components(
     redundant min-agg input, they never change the result, but the
     skipped ``distinct`` is one full shuffle of the edge list.
 
-    Join rule, decided once from the label frame's row count (constant
-    across rounds — labels only re-point, they never appear or vanish):
-    at most ``broadcast_max_labels`` labels are broadcast, so each
-    round's propagate join streams the symmetrized edge list MAP-ONLY
-    and the pointer-jump self-join loses both exchanges; only the
-    min-aggregate shuffles. Above the bound the edge list is
-    ``graph.laid_out`` on ``src`` once, so each round exchanges and
-    sorts only the label side. ``min`` is order-exact, so the result is
-    bit-identical either way. Set 0 to force the shuffled shape.
+    The propagate join goes through ``graph._EdgeSide`` and the pointer
+    jump follows the same bound, from the label frame's row count,
+    taken once (labels only re-point, they never appear or vanish).
+    ``min`` is order-exact, so the result is bit-identical either way.
 
-    The evidence for that layout is weaker than for the graph
+    The evidence for the edge layout here is weaker than for the graph
     operators. In the matched-calib A/B at 20M edges against a shuffled
     edge list without the layout (``plans/r14/edgecache_ab_20m.json``),
     the medians tied (33.72 s vs 33.73 s) and only the floors favoured
@@ -1079,8 +1073,6 @@ def connected_components(
     kept so that every iterative operator follows one rule; a
     quiet-host re-measurement could still overturn it.
     """
-    import gc
-
     probed = False
     if max_driver_edges:
         # persist BEFORE probing: when the probe overflows the cap, the
@@ -1120,67 +1112,40 @@ def connected_components(
     summable = id_type in ("tinyint", "smallint", "int", "bigint") or (
         id_type.startswith("decimal")
     )
-    # one count on the already-pinned label frame decides every round
-    # (see the docstring's join rule)
-    bc_labels = labels.count() <= max(0, broadcast_max_labels)
-    if not bc_labels:
-        # built from the cached edges in one pass, which it replaces
-        edges_l = laid_out(edges, "src")
-        edges.unpersist(blocking=False)
-        edges = edges_l
-    prev_sum = None
-    for i in range(max_iter):
-        lab_side = F.broadcast(labels) if bc_labels else labels
-        propagated = edges.join(lab_side, edges.src == lab_side.id).select(
+    n = graph._rows(labels)
+    sums = []
+
+    def step(labels, _):
+        propagated = edge_side.join(labels, n).select(
             F.col("dst").alias("id"), "component"
         )
         jump_side = labels.select(
             F.col("id").alias("component"),
             F.col("component").alias("__cc_jump"),
         )
-        if bc_labels:
-            jump_side = F.broadcast(jump_side)
         jumped = labels.join(
-            jump_side,
-            "component",
+            graph._broadcast_within(jump_side, n), "component"
         ).select("id", F.col("__cc_jump").alias("component"))
-        # Eager localCheckpoint EVERY round: the round's plan references
-        # `labels` three times (propagate, jump, carry), so an uncut
-        # lineage TRIPLES per round — 3^k plan nodes by round k, and the
-        # driver OOMs in query planning around round 5 (measured: an
-        # 80-edge cyclic graph at 4 GB heap; the previous every-6-rounds
-        # cut allowed 3^6 ≈ 729x growth and only survived because most
-        # real graphs converge in <5 rounds). The checkpoint both
-        # materializes the round (replacing persist + first-access) and
-        # truncates the plan to a leaf.
-        new_labels = (
+        return (
             propagated.union(jumped)
             .union(labels.select("id", "component"))
             .groupBy("id")
             .agg(F.min("component").alias("component"))
-            .localCheckpoint()
         )
-        if summable:
-            label_sum = new_labels.agg(
-                F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-            ).collect()[0][0]
-            converged = label_sum == prev_sum and i > 0
-            prev_sum = label_sum
-        else:
-            converged = (
-                new_labels.join(
-                    labels.withColumnRenamed("component", "__old"), "id"
-                )
+
+    def settled(old, new):
+        if not summable:
+            return graph._rows(
+                new.join(old.withColumnRenamed("component", "__old"), "id")
                 .filter(F.col("component") != F.col("__old"))
-                .count()
-                == 0
-            )
-        labels = new_labels
-        if (i + 1) % 6 == 0:
-            gc.collect()  # let ContextCleaner drop orphaned checkpoint blocks
-        if converged:
-            break
-    edges.unpersist()
+            ) == 0
+        sums.append(new.agg(
+            F.sum(F.col("component").cast("decimal(38,0)"))
+        ).collect()[0][0])
+        return len(sums) > 1 and sums[-1] == sums[-2]
+
+    with graph._EdgeSide(edges, persisted=True) as edge_side:
+        labels = graph._rounds(labels, step, max_iter, settled)
     if probed:
         pairs.unpersist()
     return labels

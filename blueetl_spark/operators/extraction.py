@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from blueetl_spark.session import local_df
 
 from blueetl_spark import schemas
-from blueetl_spark.functions.qdsl import Query, compile_query
+from blueetl_spark.functions.qdsl import compile_query
 
 NeuronClassesConfig = dict[str, dict[str, Any]]
 # per-class config keys: query (q-DSL), limit (int|None), population, node_set

@@ -12,22 +12,25 @@ Scale design (the shape a 1000-executor run needs):
   optional dedup), extended with per-source degree ONCE, and pinned —
   every iteration re-reads that frame.
 - One join rule for every iterative operator here (and
-  ``dedup.connected_components``), decided from a row count the
-  operator already takes: when the node-sized side (ranks, frontier,
-  distances, survivors, labels) has at most ``broadcast_max_nodes``
-  rows it is broadcast and the round is MAP-ONLY on the edge side;
-  otherwise the edge frame is laid out once by :func:`laid_out` and
-  each round shuffles only the node-sized side. The layout is released
-  before the operator returns.
+  ``dedup.connected_components``), owned by :class:`_EdgeSide`: each
+  round joins a node-sized side (ranks, frontier, distances, labels)
+  against the static edge frame on ``src``. When that side has at most
+  ``BROADCAST_MAX_NODES`` rows (read at call time) it is broadcast and
+  the round is MAP-ONLY on the edge side; otherwise the edge frame is
+  laid out once by :func:`laid_out` and each round shuffles only the
+  node-sized side. The row count is one the operator already takes
+  (:func:`_rows`), and the layout is released before the operator
+  returns. Survivor and settled-set joins follow the same bound.
+- Lineage: :func:`_rounds` ends each round in an eager
+  ``localCheckpoint`` (an uncut iterative plan grows geometrically and
+  OOMs the *driver* in query planning; measured on
+  ``connected_components``) and runs ``gc.collect()`` every sixth round
+  so the ContextCleaner reclaims the orphaned checkpoint blocks.
 - Dangling mass (nodes with no out-links) is handled exactly: the
   dangling node SET is computed once (anti join); each round folds their
   current rank into a single scalar (one map-side-combined agg) and
   redistributes it uniformly — the standard matrix-free formulation, no
   dense vector anywhere.
-- Lineage: each round ends in an eager ``localCheckpoint`` — the same
-  discipline as ``connected_components`` (an uncut iterative plan grows
-  geometrically and OOMs the *driver* in query planning; measured there,
-  applied here from the start).
 - Convergence: L1 delta between generations, one agg per round; the
   loop stops at ``tol`` or ``max_iter``. The delta join shares the
   ranks' hash partitioning, so it does not add an exchange beyond the
@@ -41,10 +44,28 @@ rather than a value-hash gate.
 
 from __future__ import annotations
 
+import gc
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from blueetl_spark.session import shuffle_partitions
+
+#: node-sized sides of at most this many rows are broadcast (~100 MB of
+#: ranks); read at call time, so a test can move it
+BROADCAST_MAX_NODES = 4_000_000
+
+
+def _rows(df: DataFrame) -> int:
+    """Row count of ``df`` in one Spark job. Under AQE ``count()`` runs
+    two even on a pinned frame: one for its aggregate's exchange (map
+    stage), one for the result."""
+    return df._jdf.queryExecution().toRdd().count()
+
+
+def _broadcast_within(df: DataFrame, rows: int) -> DataFrame:
+    """``df`` hinted for broadcast when its ``rows`` fit the bound."""
+    return F.broadcast(df) if rows <= BROADCAST_MAX_NODES else df
 
 
 def laid_out(edges: DataFrame, key: str) -> DataFrame:
@@ -72,6 +93,81 @@ def laid_out(edges: DataFrame, key: str) -> DataFrame:
     return out
 
 
+class _EdgeSide:
+    """The static ``(src, dst, ...)`` edge frame of an iterative operator;
+    a context manager that releases what it persisted on exit.
+
+    ``rows`` is the node side's row count when the operator knows it
+    before the loop and reads the edges before the first round
+    (pagerank): the frame is then pinned eagerly, or laid out at once.
+    Without it the pin is lazy and each :meth:`join` decides from that
+    round's count; a first round past the bound lays out from the
+    unpinned plan, so the pin is never filled. ``persisted`` marks an
+    edge frame the caller already persisted and filled
+    (``connected_components``' label frame reads it first): it is the
+    pin, the layout is built from it, and it is released here.
+    """
+
+    def __init__(self, edges: DataFrame, rows: int | None = None,
+                 persisted: bool = False):
+        self._plan = self._pin = edges
+        self._layout, self._joined = None, False
+        self._persisted = edges if persisted else None
+        if rows is not None and rows > BROADCAST_MAX_NODES:
+            self._lay_out()
+        elif not persisted:
+            self._pin = edges.localCheckpoint(eager=rows is not None)
+
+    @property
+    def edges(self) -> DataFrame:
+        return self._pin if self._layout is None else self._layout
+
+    def _lay_out(self) -> None:
+        self._layout = laid_out(self._pin if self._joined else self._plan, "src")
+        if self._persisted is not None:  # the layout replaces it
+            self._persisted.unpersist(blocking=False)
+            self._persisted = None
+
+    def join(self, side: DataFrame, rows: int) -> DataFrame:
+        """``side`` (keyed ``id``, ``rows`` rows) inner-joined to the
+        edges on ``id == src`` under the one join rule."""
+        if rows > BROADCAST_MAX_NODES and self._layout is None:
+            self._lay_out()
+        self._joined = True
+        side, e = _broadcast_within(side, rows), self.edges
+        return side.join(e, side["id"] == e["src"])
+
+    def release(self) -> None:
+        """Unpersist the layout or the caller's persisted edges. Every
+        round ends in a checkpoint, so no result references them."""
+        for df in (self._layout, self._persisted):
+            if df is not None:
+                df.unpersist(blocking=False)
+
+    def __enter__(self) -> _EdgeSide:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.release()
+
+
+def _rounds(state, step, n, done=None):
+    """``state`` after up to ``n`` rounds of ``state = step(state, i)``.
+    Each round's frame is pinned with an eager ``localCheckpoint``, and
+    ``gc.collect()`` runs every sixth round so the ContextCleaner drops
+    the orphaned checkpoint blocks (they are reclaimed only after a GC).
+    ``done(old, new)`` stops the loop early; it is not asked after the
+    last round, whose answer would change nothing."""
+    for i in range(n):
+        new = step(state, i).localCheckpoint()
+        if (i + 1) % 6 == 0:
+            gc.collect()
+        if done is not None and i < n - 1 and done(state, new):
+            return new
+        state = new
+    return state
+
+
 def pagerank(
     edges: DataFrame,
     src_col: str = "src",
@@ -84,7 +180,6 @@ def pagerank(
     assume_distinct_edges: bool = False,
     personalization: DataFrame | None = None,
     weight_col: str = "weight",
-    broadcast_max_nodes: int = 4_000_000,
 ) -> DataFrame:
     """Exact (matrix-free) PageRank over a directed edge list.
 
@@ -94,25 +189,18 @@ def pagerank(
     the L1-delta stop threshold; set ``tol=0.0`` to force exactly
     ``max_iter`` rounds (reproducible iteration counts for tests).
     ``assume_distinct_edges=True`` skips the edge-dedup shuffle, same
-    contract as ``connected_components``. Every round ends in an eager
-    localCheckpoint: each round's rank frame is referenced three times
-    (dangling mass, contributions, carry), so an uncut lineage triples
-    per round.
+    contract as ``connected_components``. Each round's rank frame is
+    referenced three times (dangling mass, contributions, carry), so an
+    uncut lineage would triple per round.
 
-    Join rule, from the vertex count ``n`` (already computed for the
-    teleport base): when ``n <= broadcast_max_nodes`` (~100 MB of ranks
-    at the default bound) the rank frame is broadcast and every round
-    is MAP-ONLY on the edge side — the only shuffle left is the
-    map-side-combined partial rows of ``groupBy(dst)``, and the
-    node-sized contribution/teleport joins broadcast too. Above the
-    bound the weighted-edge frame is :func:`laid_out` on ``src`` once,
-    so each round's sort-merge join exchanges and sorts only the
-    node-sized rank side. Float note:
-    the broadcast shape accumulates each dst's contributions in edge-
-    partition order rather than sorted-src order, so raw ranks move at
-    the ~1e-15 relative level — inside every consumer's contract (the
-    oracle gates round to 9 dp on ~1e-4-scale ranks; the test oracle
-    allows rel 1e-9), verified equal-after-rounding at both gate SFs.
+    Join rule from the vertex count (already taken for the teleport
+    base); under the bound the node-sized contribution join broadcasts
+    too. Float note: the broadcast shape accumulates each dst's
+    contributions in edge-partition order rather than sorted-src order,
+    so raw ranks move at the ~1e-15 relative level — inside every
+    consumer's contract (the oracle gates round to 9 dp on ~1e-4-scale
+    ranks; the test oracle allows rel 1e-9), verified
+    equal-after-rounding at both gate SFs.
 
     ``personalization`` makes it topic-sensitive (personalized)
     PageRank: a (id, ``weight_col``) frame of non-negative teleport
@@ -143,123 +231,110 @@ def pagerank(
     if nodes is not None:
         ids = ids.union(nodes.select(F.col(id_col).alias("id")))
     ids = ids.distinct().localCheckpoint()
-    n = ids.count()
+    n = _rows(ids)
     if n == 0:
         return ids.withColumn("rank", F.lit(0.0))
 
-    bc = n <= broadcast_max_nodes
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
     # weight each edge once; every iteration reuses this pinned frame
-    we = e.join(deg, "src").select(
-        "src", "dst", (F.lit(1.0) / F.col("__deg")).alias("w")
-    )
-    we = we.localCheckpoint() if bc else laid_out(we, "src")
-    # dangling membership is static: carry it as a flag on the rank frame
-    # so the per-round mass aggregate never joins (one node-sized scan)
-    flagged = ids.join(
-        we.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("__out", F.lit(True)),
-        "id",
-        "left",
-    ).select("id", F.coalesce("__out", F.lit(False)).alias("__out"))
-
-    carry = ["__out"]
-    if personalization is not None:
-        # duplicate ids fold (sum) so a replayed/unioned seed frame can't
-        # duplicate rank-frame rows through the join below
-        pw = (
-            personalization.select(
-                F.col(id_col).alias("id"),
-                F.col(weight_col).cast("double").alias("__wraw"),
-            )
-            .groupBy("id")
-            .agg(F.sum("__wraw").alias("__wraw"))
-        )
-        tagged = flagged.join(pw, "id", "left").select(
-            "id", "__out", F.coalesce("__wraw", F.lit(0.0)).alias("__wraw")
-        )
-        # normalize over the VERTEX SET (weights on non-vertices carry no
-        # teleport mass — they must not dilute the distribution); two
-        # scalars to the driver, bounded by construction
-        wmin, wsum = tagged.agg(
-            F.min("__wraw"), F.sum("__wraw")
-        ).collect()[0]
-        if wmin is not None and wmin < 0:
-            raise ValueError("personalization weights must be non-negative")
-        if not wsum or wsum <= 0:
-            raise ValueError(
-                "personalization weights must have a positive sum over the "
-                "graph's vertices"
-            )
-        flagged = tagged.select(
+    with _EdgeSide(
+        e.join(deg, "src").select(
+            "src", "dst", (F.lit(1.0) / F.col("__deg")).alias("w")
+        ),
+        rows=n,
+    ) as we:
+        # dangling membership is static: carry it as a flag on the rank frame
+        # so the per-round mass aggregate never joins (one node-sized scan)
+        flagged = ids.join(
+            we.edges.select(F.col("src").alias("id"))
+            .distinct()
+            .withColumn("__out", F.lit(True)),
             "id",
-            "__out",
-            (F.col("__wraw") / F.lit(float(wsum))).alias("__w"),
-        )
-        carry = ["__out", "__w"]
+            "left",
+        ).select("id", F.coalesce("__out", F.lit(False)).alias("__out"))
 
-    base = (1.0 - damping) / n
-    init = F.col("__w") if personalization is not None else F.lit(1.0 / n)
-    ranks = flagged.withColumn("rank", init).localCheckpoint()
-    for it in range(max_iter):
-        # dangling mass rides the round's own plan as a broadcast 1-row
-        # aggregate — no per-round driver collect; the checkpointed rank
-        # RDD is scanned twice inside ONE job instead of across two
-        dmass = ranks.filter(~F.col("__out")).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dmass")
-        )
-        rank_side = ranks.select("id", "rank")
-        if bc:
-            rank_side = F.broadcast(rank_side)
-        contrib = (
-            rank_side.join(we, rank_side["id"] == we["src"])
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("__in"))
-        )
-        if bc:
-            contrib = F.broadcast(contrib)
-        if personalization is None:
-            teleport = F.lit(base) + F.lit(damping) * F.col(
-                "__dmass"
-            ) / F.lit(float(n))
-        else:
-            teleport = F.lit(1.0 - damping) * F.col("__w") + F.lit(
-                damping
-            ) * F.col("__dmass") * F.col("__w")
-        new_ranks = (
-            ranks.select(
-                "id", *carry, F.col("rank").alias("__prev")
+        carry = ["__out"]
+        if personalization is not None:
+            # duplicate ids fold (sum) so a replayed/unioned seed frame can't
+            # duplicate rank-frame rows through the join below
+            pw = (
+                personalization.select(
+                    F.col(id_col).alias("id"),
+                    F.col(weight_col).cast("double").alias("__wraw"),
+                )
+                .groupBy("id")
+                .agg(F.sum("__wraw").alias("__wraw"))
             )
-            .join(contrib, "id", "left")
-            .crossJoin(F.broadcast(dmass))
-            .select(
+            tagged = flagged.join(pw, "id", "left").select(
+                "id", "__out", F.coalesce("__wraw", F.lit(0.0)).alias("__wraw")
+            )
+            # normalize over the VERTEX SET (weights on non-vertices carry no
+            # teleport mass — they must not dilute the distribution); two
+            # scalars to the driver, bounded by construction
+            wmin, wsum = tagged.agg(
+                F.min("__wraw"), F.sum("__wraw")
+            ).collect()[0]
+            if wmin is not None and wmin < 0:
+                raise ValueError("personalization weights must be non-negative")
+            if not wsum or wsum <= 0:
+                raise ValueError(
+                    "personalization weights must have a positive sum over the "
+                    "graph's vertices"
+                )
+            flagged = tagged.select(
                 "id",
-                *carry,
-                (
-                    teleport
-                    + F.lit(damping) * F.coalesce(F.col("__in"), F.lit(0.0))
-                ).alias("rank"),
-                "__prev",
+                "__out",
+                (F.col("__wraw") / F.lit(float(wsum))).alias("__w"),
             )
-            .localCheckpoint()
-        )
-        ranks = new_ranks.drop("__prev")
-        # tol=0.0 means "run exactly max_iter rounds": skip the delta job
-        # entirely — it's one full join+aggregate pass per round otherwise
-        if tol > 0.0 and it < max_iter - 1:
-            delta = (
-                new_ranks.agg(
-                    F.sum(F.abs(F.col("rank") - F.col("__prev"))).alias("d")
-                ).collect()[0]["d"]
+            carry = ["__out", "__w"]
+
+        dm = F.col("__dmass")
+        if personalization is None:
+            init, base = F.lit(1.0 / n), F.lit((1.0 - damping) / n)
+            teleport = base + F.lit(damping) * dm / F.lit(float(n))
+        else:
+            init = w = F.col("__w")
+            teleport = F.lit(1.0 - damping) * w + F.lit(damping) * dm * w
+
+        def step(ranks, _):
+            # dangling mass rides the round's own plan as a broadcast 1-row
+            # aggregate — no per-round driver collect; the checkpointed rank
+            # RDD is scanned twice inside ONE job instead of across two
+            dmass = ranks.filter(~F.col("__out")).agg(
+                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dmass")
             )
-            if delta is not None and delta <= tol:
-                break
-    if not bc:
-        # every round ended in a localCheckpoint, so the returned frame
-        # no longer references the layout
-        we.unpersist(blocking=False)
-    return ranks.select("id", "rank")
+            contrib = (
+                we.join(ranks.select("id", "rank"), n)
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum(F.col("rank") * F.col("w")).alias("__in"))
+            )
+            return (
+                ranks.select("id", *carry, F.col("rank").alias("__prev"))
+                .join(_broadcast_within(contrib, n), "id", "left")
+                .crossJoin(F.broadcast(dmass))
+                .select(
+                    "id",
+                    *carry,
+                    (
+                        teleport
+                        + F.lit(damping) * F.coalesce(F.col("__in"), F.lit(0.0))
+                    ).alias("rank"),
+                    "__prev",
+                )
+            )
+
+        def settled(_, new):
+            # one full join+aggregate pass: tol=0.0 ("run exactly max_iter
+            # rounds") skips it
+            delta = new.agg(
+                F.sum(F.abs(F.col("rank") - F.col("__prev")))
+            ).collect()[0][0]
+            return delta is not None and delta <= tol
+
+        return _rounds(
+            flagged.withColumn("rank", init).localCheckpoint(),
+            step, max_iter, settled if tol > 0.0 else None,
+        ).select("id", "rank")
 
 
 def quality_weights(
@@ -470,25 +545,23 @@ def tree_closure(
         raise ValueError(
             f"node {multi[0]['id']!r} has multiple parents — not a forest"
         )
-    state = ptr.select("id", "anc", F.lit(1).cast("long").alias("depth"))
-    rounds = max(1, (max_depth - 1).bit_length())
-    for _ in range(rounds):
+
+    def jump(state, _):
         hop = state.select(
             F.col("id").alias("__a"),
             F.col("anc").alias("__anc2"),
             F.col("depth").alias("__d2"),
         )
-        state = (
-            state.join(hop, state["anc"] == hop["__a"], "left")
-            .select(
-                "id",
-                F.coalesce("__anc2", "anc").alias("anc"),
-                (
-                    F.col("depth") + F.coalesce("__d2", F.lit(0))
-                ).alias("depth"),
-            )
-            .localCheckpoint()
+        return state.join(hop, state["anc"] == hop["__a"], "left").select(
+            "id",
+            F.coalesce("__anc2", "anc").alias("anc"),
+            (F.col("depth") + F.coalesce("__d2", F.lit(0))).alias("depth"),
         )
+
+    state = _rounds(
+        ptr.select("id", "anc", F.lit(1).cast("long").alias("depth")),
+        jump, max(1, (max_depth - 1).bit_length()),
+    )
     # a chain TERMINATED iff its final ancestor has no parent pointer of
     # its own (anc not among ptr's children); anything still pointing at
     # a child after full doubling sits on a cycle (or exceeds max_depth)
@@ -524,7 +597,6 @@ def bfs_hops(
     dst_col: str = "dst",
     id_col: str = "id",
     directed: bool = False,
-    broadcast_max_nodes: int = 4_000_000,
 ) -> DataFrame:
     """Multi-source BFS: minimum hop distance from any source to every
     node reachable within ``max_hops`` — "blast radius" queries
@@ -548,18 +620,15 @@ def bfs_hops(
     settled set stays a flat union of the already-pinned frontiers, so
     lineage is still one round deep but the O(V) settled set is never
     re-copied every round (re-checkpointing the union cost one extra
-    eager job per hop and a full settled-set copy).
+    eager job per hop and a full settled-set copy). So the loop is its
+    own, not :func:`_rounds`: a round's state is the pinned frontier
+    plus the unpinned settled union and two running counts, which a
+    one-frame step would carry outside its state, in no fewer lines.
 
-    Join rule, from each round's frontier count (one cheap job on the
-    already-pinned frontier): while the frontier has at most
-    ``broadcast_max_nodes`` rows it is broadcast and the adjacency list
-    streams MAP-ONLY; the first round past the bound lays the adjacency
-    list out (:func:`laid_out` on ``src``) and every later round joins
-    against it (a frontier that shrinks back under the bound is
-    broadcast against the layout). The settled set, which only grows, is
-    broadcast into the anti join under the same bound on its own
-    running count. Hop distances are exact integers, so the join
-    strategy cannot change the result.
+    Join rule from each round's frontier count (one job on the pinned
+    frontier); the settled set, which only grows, follows the same
+    bound on its running count. Hop distances are exact integers, so
+    the join strategy cannot change the result.
     """
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
@@ -569,50 +638,33 @@ def bfs_hops(
         adj = adj.unionAll(
             edges.filter(s != d).select(d.alias("src"), s.alias("dst"))
         )
-    adj = adj.distinct()
-    pinned = adj.localCheckpoint(eager=False)
-    dist = (
-        sources.select(F.col(id_col).alias("id"))
-        .distinct()
-        .select("id", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint(eager=True)
-    )
-    f_rows = dist.count()
-    settled_rows = f_rows
-    frontier = dist
-    layout = None
-    for hop in range(1, max_hops + 1):
-        bc_f = f_rows <= broadcast_max_nodes
-        if not bc_f and layout is None:
-            # before any round has run the lazy pin is still empty: lay
-            # out from the unpinned plan so it is never filled
-            layout = laid_out(adj if hop == 1 else pinned, "src")
-        e_side = pinned if layout is None else layout
-        f_side = frontier.select("id")
-        if bc_f:
-            f_side = F.broadcast(f_side)
-        reached = (
-            f_side.join(e_side, f_side["id"] == e_side["src"])
-            .select(F.col("dst").alias("id"))
+    with _EdgeSide(adj.distinct()) as edge_side:
+        dist = frontier = (
+            sources.select(F.col(id_col).alias("id"))
             .distinct()
-        )
-        settled_side = dist.select("id")
-        if settled_rows <= broadcast_max_nodes:
-            settled_side = F.broadcast(settled_side)
-        new = (
-            reached.join(settled_side, "id", "left_anti")
-            .select("id", F.lit(hop).cast("long").alias("dist"))
+            .select("id", F.lit(0).cast("long").alias("dist"))
             .localCheckpoint(eager=True)
         )
-        dist = dist.unionAll(new)
-        frontier = new
-        if hop < max_hops:  # after the last hop no count is read
-            f_rows = new.count()
-            settled_rows += f_rows
-    if layout is not None:
-        # every hop's frontier is eagerly pinned, so the returned union
-        # no longer references the layout
-        layout.unpersist(blocking=False)
+        f_rows = settled_rows = _rows(dist)
+        for hop in range(1, max_hops + 1):
+            reached = (
+                edge_side.join(frontier.select("id"), f_rows)
+                .select(F.col("dst").alias("id"))
+                .distinct()
+            )
+            frontier = (
+                reached.join(
+                    _broadcast_within(dist.select("id"), settled_rows),
+                    "id",
+                    "left_anti",
+                )
+                .select("id", F.lit(hop).cast("long").alias("dist"))
+                .localCheckpoint(eager=True)
+            )
+            dist = dist.unionAll(frontier)
+            if hop < max_hops:  # after the last hop no count is read
+                f_rows = _rows(frontier)
+                settled_rows += f_rows
     return dist
 
 
@@ -625,7 +677,6 @@ def shortest_paths(
     weight_col: str = "weight",
     id_col: str = "id",
     directed: bool = False,
-    broadcast_max_nodes: int = 4_000_000,
 ) -> DataFrame:
     """Multi-source weighted shortest paths, Bellman–Ford unrolled to
     exactly ``rounds`` relaxation rounds — the cost-aware sibling of
@@ -646,16 +697,11 @@ def shortest_paths(
     recursive CTE enumerates path costs and dedups; this keeps one row
     per node throughout). ``localCheckpoint`` pins each round.
 
-    Join rule, from the distance frame's count (taken on the round's
-    already-pinned frame, and no longer once past the bound — the frame
-    only grows): while it has at most ``broadcast_max_nodes`` rows the
-    relaxation join broadcasts it and the adjacency list streams
-    MAP-ONLY, leaving the min-aggregate as the only per-round exchange;
-    the first round past the bound lays the adjacency list out
-    (:func:`laid_out` on ``src``) and every later round reuses it. The
-    per-node min over candidate costs is order-independent (exact float
-    comparison, no accumulation), so the join strategy cannot change
-    the result.
+    Join rule from the distance frame's count, taken on the round's
+    pinned frame and no longer once past the bound (the frame only
+    grows). The per-node min over candidate costs is order-independent
+    (exact float comparison, no accumulation), so the join strategy
+    cannot change the result.
     """
     if rounds < 0:
         raise ValueError("rounds must be >= 0")
@@ -669,58 +715,47 @@ def shortest_paths(
                 d.alias("src"), s.alias("dst"), w.alias("w")
             )
         )
-    adj = adj.groupBy("src", "dst").agg(F.min("w").alias("w"))
-    pinned = adj.localCheckpoint(eager=False)
+    edge_side = _EdgeSide(adj.groupBy("src", "dst").agg(F.min("w").alias("w")))
     dist = (
         sources.select(F.col(id_col).alias("id"))
         .distinct()
         .select("id", F.lit(0).cast("long").alias("cost"))
         .localCheckpoint(eager=True)
     )
-    d_rows = dist.count()
-    layout = None
-    for i in range(rounds):
-        bc = d_rows <= broadcast_max_nodes
-        if not bc and layout is None:
-            # lay out from the unpinned plan while the lazy pin is
-            # still empty (no round has run yet)
-            layout = laid_out(adj if i == 0 else pinned, "src")
-        e_side = pinned if layout is None else layout
-        d_side = F.broadcast(dist) if bc else dist
-        relaxed = (
-            d_side.join(e_side, d_side["id"] == e_side["src"])
-            .select(F.col("dst").alias("id"), (F.col("cost") + F.col("w")).alias("cost"))
+    rows = _rows(dist)
+
+    def relax(dist, i):
+        nonlocal rows
+        if i and rows <= BROADCAST_MAX_NODES:
+            # the frame only grows: past the bound it never fits again
+            rows = _rows(dist)
+        relaxed = edge_side.join(dist, rows).select(
+            F.col("dst").alias("id"), (F.col("cost") + F.col("w")).alias("cost")
         )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("cost").alias("cost"))
-            .localCheckpoint(eager=True)
-        )
-        if bc and i < rounds - 1:
-            # the frame only grows: past the bound it never fits again;
-            # after the last round no count is read
-            d_rows = dist.count()
-    if layout is not None:
-        # each round's distance frame is eagerly pinned, so the result
-        # no longer references the layout
-        layout.unpersist(blocking=False)
-    return dist
+        return dist.unionByName(relaxed).groupBy("id").agg(F.min("cost").alias("cost"))
+
+    with edge_side:
+        return _rounds(dist, relax, rounds)
 
 
-def _peel(und, alive, bc):
+def _peel(und, alive, rows):
     """One k-core peel: keep the edges of ``und`` whose both endpoints
-    are in ``alive``, pinned. ``bc`` broadcasts the node-sized survivor
-    frame into both semi-joins, so the edge set streams MAP-ONLY."""
-    a_u = alive.select(F.col("id").alias("u"))
-    a_v = alive.select(F.col("id").alias("v"))
-    if bc:
-        a_u, a_v = F.broadcast(a_u), F.broadcast(a_v)
+    are in ``alive`` (``rows`` survivors, under the one join rule),
+    pinned."""
+    a_u = _broadcast_within(alive.select(F.col("id").alias("u")), rows)
+    a_v = _broadcast_within(alive.select(F.col("id").alias("v")), rows)
     return (
         und.join(a_u, "u", "left_semi")
         .join(a_v, "v", "left_semi")
         .localCheckpoint()
     )
+
+
+# k_core and k_core_fixed keep their own loops: each round pins two
+# frames (the survivors, read by the count and both semi-joins, then the
+# peeled edges), and k_core tests convergence between the two. On
+# _rounds, which pins one frame per round, the survivor pin and the
+# counts would move into the step, and the loops would not get shorter.
 
 
 def k_core_fixed(
@@ -729,7 +764,6 @@ def k_core_fixed(
     rounds: int,
     src_col: str = "src",
     dst_col: str = "dst",
-    broadcast_max_nodes: int = 4_000_000,
 ) -> DataFrame:
     """Exactly ``rounds`` peel iterations of k-core decomposition —
     the SQL-replayable twin of :func:`k_core` (no data-dependent
@@ -746,25 +780,23 @@ def k_core_fixed(
     edge set, each round's frame pinned with ``localCheckpoint`` so
     lineage (and recompute on failure) stays one round deep.
 
-    Join rule, decided ONCE from the round-0 survivor count on its
-    already-pinned frame: at most ``broadcast_max_nodes`` survivors
-    are broadcast into every peel's semi-joins (survivors only shrink,
-    so a fitting round-0 frame fits every round); otherwise the peels
-    shuffle. A per-round re-count measured slower (the extra job per
-    peel cost more than it informed). Set membership is exact, so the
-    strategy cannot change the result.
+    Join rule from the round-0 survivor count, taken once: survivors
+    only shrink, so a fitting round-0 frame fits every round, and a
+    per-round re-count measured slower (the extra job per peel cost
+    more than it informed). Set membership is exact, so the strategy
+    cannot change the result.
     """
     if k < 1 or rounds < 1:
         raise ValueError("k and rounds must be >= 1")
     und = _canonical_und(edges, src_col, dst_col)
-    bc = None
+    n = None
     for i in range(rounds):
         alive = _degrees(und, "core_degree").filter(F.col("core_degree") >= k)
         if i < rounds - 1:
             alive = alive.localCheckpoint()
-            if bc is None:
-                bc = alive.count() <= broadcast_max_nodes
-            und = _peel(und, alive, bc)
+            if n is None:
+                n = _rows(alive)
+            und = _peel(und, alive, n)
     return alive
 
 
@@ -774,7 +806,6 @@ def k_core(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iter: int = 100,
-    broadcast_max_nodes: int = 4_000_000,
 ) -> DataFrame:
     """Vertices of the k-core: the maximal subgraph where every vertex
     keeps degree ≥ k (spam/link-farm subgraphs and dense communities
@@ -789,11 +820,8 @@ def k_core(
     ``connected_components``/``pagerank``; convergence is witnessed by
     the surviving-vertex count (one scalar per round). The iteration
     count is bounded by the peel depth (≤ vertex count; in practice a
-    handful of rounds), ``max_iter`` guards pathological chains.
-
-    Join rule, from that per-round survivor count: at most
-    ``broadcast_max_nodes`` survivors are broadcast into the peel's
-    semi-joins, otherwise the peel shuffles.
+    handful of rounds), ``max_iter`` guards pathological chains. Join
+    rule from that per-round survivor count.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -805,9 +833,9 @@ def k_core(
             .filter(F.col("core_degree") >= k)
             .localCheckpoint()
         )
-        n = alive.count()
+        n = _rows(alive)
         if n == prev_n or n == 0:
             return alive
         prev_n = n
-        und = _peel(und, alive, n <= broadcast_max_nodes)
+        und = _peel(und, alive, n)
     return alive

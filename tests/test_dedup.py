@@ -1124,28 +1124,25 @@ def test_jaccard_prefix_matches_brute_with_fewer_candidates(spark):
         pref_collisions, full_collisions)
 
 
-def test_connected_components_broadcast_strategy_identical(spark):
-    """r13 optimization contract: broadcast_max_labels only picks the
-    propagate/jump join strategy — labels are exact mins, so the
-    distributed path must emit identical components with the label
+def test_connected_components_broadcast_strategy_identical(spark, monkeypatch):
+    """r13 optimization contract: ``graph.BROADCAST_MAX_NODES`` only
+    picks the propagate/jump join strategy — labels are exact mins, so
+    the distributed path must emit identical components with the label
     broadcast on (default) and forced off (0)."""
-    from blueetl_spark.operators import dedup
+    from blueetl_spark.operators import dedup, graph
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 20)],
         "id_a long, id_b long",
     )
-    bc = sorted(
-        map(tuple, dedup.connected_components(pairs, max_driver_edges=0).collect())
-    )
-    sh = sorted(
-        map(
-            tuple,
-            dedup.connected_components(
-                pairs, max_driver_edges=0, broadcast_max_labels=0
-            ).collect(),
-        )
-    )
+
+    def components():
+        out = dedup.connected_components(pairs, max_driver_edges=0)
+        return sorted(map(tuple, out.collect()))
+
+    bc = components()
+    monkeypatch.setattr(graph, "BROADCAST_MAX_NODES", 0)
+    sh = components()
     assert bc == sh
     comp = dict(bc)
     assert comp[1] == comp[2] == comp[3] == comp[4] == 1

@@ -503,7 +503,7 @@ PARITY_EDGES = [
 
 
 def _parity_ops(spark):
-    from blueetl_spark.operators import graph
+    from blueetl_spark.operators import dedup, graph
 
     e = spark.createDataFrame(PARITY_EDGES, "src long, dst long")
     we = e.select(
@@ -512,21 +512,20 @@ def _parity_ops(spark):
     seed = spark.createDataFrame([(1,)], "id long")
     pers = spark.createDataFrame([(1, 1.0), (9, 2.0)], "id long, weight double")
     return {
-        "pagerank": lambda **kw: graph.pagerank(e, max_iter=5, tol=0.0, **kw),
-        "pagerank_personalized": lambda **kw: graph.pagerank(
-            e, max_iter=5, tol=0.0, personalization=pers, **kw
+        "pagerank": lambda: graph.pagerank(e, max_iter=5, tol=0.0),
+        "pagerank_personalized": lambda: graph.pagerank(
+            e, max_iter=5, tol=0.0, personalization=pers
         ),
         # stops on the L1 delta after 7 of the 20 rounds
-        "pagerank_tol": lambda **kw: graph.pagerank(
-            e, max_iter=20, tol=0.15, **kw
+        "pagerank_tol": lambda: graph.pagerank(e, max_iter=20, tol=0.15),
+        "bfs_hops": lambda: graph.bfs_hops(e, seed, 5),
+        "bfs_hops_directed": lambda: graph.bfs_hops(e, seed, 5, directed=True),
+        "shortest_paths": lambda: graph.shortest_paths(we, seed, 5),
+        "k_core_fixed": lambda: graph.k_core_fixed(e, k=2, rounds=3),
+        "k_core": lambda: graph.k_core(e, k=2),
+        "connected_components": lambda: dedup.connected_components(
+            e, "src", "dst", max_driver_edges=0
         ),
-        "bfs_hops": lambda **kw: graph.bfs_hops(e, seed, 5, **kw),
-        "bfs_hops_directed": lambda **kw: graph.bfs_hops(
-            e, seed, 5, directed=True, **kw
-        ),
-        "shortest_paths": lambda **kw: graph.shortest_paths(we, seed, 5, **kw),
-        "k_core_fixed": lambda **kw: graph.k_core_fixed(e, k=2, rounds=3, **kw),
-        "k_core": lambda **kw: graph.k_core(e, k=2, **kw),
     }
 
 
@@ -535,12 +534,13 @@ def _parity_ops(spark):
     [
         "pagerank", "pagerank_personalized", "pagerank_tol", "bfs_hops",
         "bfs_hops_directed", "shortest_paths", "k_core_fixed", "k_core",
+        "connected_components",
     ],
 )
 def test_broadcast_bound_does_not_change_results(spark, monkeypatch, op):
-    """The broadcast bound only picks the join strategy: every bound
-    gives the default's rows. Ints and mins are compared exactly; ranks
-    after rounding to 9 dp (the broadcast shape sums each dst's
+    """``graph.BROADCAST_MAX_NODES`` only picks the join strategy: every
+    bound gives the default's rows. Ints and mins are compared exactly;
+    ranks after rounding to 9 dp (the broadcast shape sums each dst's
     contributions in another order, ~1e-15 relative). The edge layout is
     built at most once per call."""
     from blueetl_spark.operators import graph
@@ -566,7 +566,8 @@ def test_broadcast_bound_does_not_change_results(spark, monkeypatch, op):
     assert layouts == []
     for bound in (0, 1, 3):
         layouts.clear()
-        assert rows(run(broadcast_max_nodes=bound)) == default, bound
+        monkeypatch.setattr(graph, "BROADCAST_MAX_NODES", bound)
+        assert rows(run()) == default, bound
         assert len(layouts) == (0 if op.startswith("k_core") else 1), bound
 
 
@@ -575,29 +576,41 @@ def _cache_entries(spark) -> int:
 
 
 @pytest.mark.parametrize("bound", [0, None], ids=["layout", "broadcast"])
-def test_edge_layout_is_released(spark, bound):
+def test_edge_layout_is_released(spark, monkeypatch, bound):
     """Each iterative operator leaves the session's cached-data registry
     as it found it, in both regimes: the edge layout (and the persisted
     edge list of connected_components) is unpersisted before return.
     ``getPersistentRDDs`` would also list the localCheckpoint blocks."""
-    from blueetl_spark.operators import dedup
+    from blueetl_spark.operators import dedup, graph
 
     ops = _parity_ops(spark)
-    kw = {} if bound is None else {"broadcast_max_nodes": bound}
+    if bound is not None:
+        monkeypatch.setattr(graph, "BROADCAST_MAX_NODES", bound)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
     )
-    calls = {
-        name: (lambda name=name: ops[name](**kw))
-        for name in ("pagerank", "bfs_hops", "shortest_paths")
-    }
+    calls = {name: ops[name] for name in ("pagerank", "bfs_hops", "shortest_paths")}
     calls["connected_components"] = lambda: dedup.connected_components(
-        pairs,
-        max_driver_edges=0,
-        **({} if bound is None else {"broadcast_max_labels": bound}),
+        pairs, max_driver_edges=0
     )
     for name, call in calls.items():
         before = _cache_entries(spark)
         out = call()
         assert _cache_entries(spark) == before, name
         assert out.count() > 0
+
+
+def test_rows_counts_a_pinned_frame_in_one_job(spark, count_jobs):
+    """``graph._rows`` equals ``count()`` and starts one Spark job on a
+    pinned aggregate, where ``count()`` under AQE starts two."""
+    from blueetl_spark.operators import graph
+
+    df = (
+        spark.range(1000)
+        .groupBy((F.col("id") % 37).alias("k"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    n, jobs = count_jobs(lambda: graph._rows(df))
+    assert n == df.count() == 37
+    assert jobs == 1

@@ -6,13 +6,14 @@ Hooks ``DataFrame.localCheckpoint`` to dump each checkpointed frame's
 plan (the round's full plan, formed immediately before the pin) while
 the REAL operator runs on a small graph, forced onto the shuffled
 (above-the-broadcast-bound) path with the edge layout. Plan SHAPE is
-size-independent here: the broadcast bounds are 0, not size estimates,
-and the session turns the planner's automatic broadcast off.
+size-independent here: ``graph.BROADCAST_MAX_NODES`` is set to 0, not a
+size estimate, and the session turns the planner's automatic broadcast
+off.
 
     python tools/capture_iter_plans.py <pagerank|bfs_hops|shortest_paths|components>
 
 Writes plans/$SPARK_GRAFT_PLANS_DIR/<op>_iter.txt (default directory
-r14; all rounds concatenated).
+r14; an absolute path is used as given; all rounds concatenated).
 """
 
 from __future__ import annotations
@@ -25,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame as CDF
 
+from blueetl_spark.operators import graph
 from blueetl_spark.session import get_spark
 
 
@@ -63,25 +65,19 @@ def main() -> int:
         F.pmod(F.xxhash64("id"), F.lit(n_nodes)).alias("dst"),
     )
     CDF.localCheckpoint = hooked
+    graph.BROADCAST_MAX_NODES = 0
     try:
         if op == "pagerank":
-            from blueetl_spark.operators.graph import pagerank
-
-            pagerank(
-                e, max_iter=3, tol=0.0, broadcast_max_nodes=0
+            graph.pagerank(
+                e, max_iter=3, tol=0.0
             ).write.format("noop").mode("overwrite").save()
         elif op == "bfs_hops":
-            from blueetl_spark.operators.graph import bfs_hops
-
-            bfs_hops(
-                e, spark.range(10), max_hops=3, broadcast_max_nodes=0
+            graph.bfs_hops(
+                e, spark.range(10), max_hops=3
             ).write.format("noop").mode("overwrite").save()
         elif op == "shortest_paths":
-            from blueetl_spark.operators.graph import shortest_paths
-
-            shortest_paths(
-                e.withColumn("weight", F.lit(1.0)), spark.range(10),
-                rounds=3, broadcast_max_nodes=0,
+            graph.shortest_paths(
+                e.withColumn("weight", F.lit(1.0)), spark.range(10), rounds=3,
             ).write.format("noop").mode("overwrite").save()
         elif op == "components":
             from blueetl_spark.operators.dedup import connected_components
@@ -89,7 +85,7 @@ def main() -> int:
             connected_components(
                 e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
                 .filter("a != b"),
-                "a", "b", max_driver_edges=0, broadcast_max_labels=0,
+                "a", "b", max_driver_edges=0,
             ).write.format("noop").mode("overwrite").save()
         else:
             raise SystemExit(f"unknown op {op}")
