@@ -39,9 +39,13 @@ from blueetl_spark.operators.extraction import (
     extract_neurons,
     extract_report,
 )
-from blueetl_spark.operators.windows import materialize_windows, windows_table
+from blueetl_spark.operators.windows import (
+    materialize_windows,
+    validate_windows,
+    windows_table,
+)
 from blueetl_spark.plans.cache import CacheManager, CachedPipeline, checksum
-from blueetl_spark.schemas import WINDOWS_SCHEMA, validate_windows
+from blueetl_spark.schemas import WINDOWS_SCHEMA
 from blueetl_spark.sources.campaign import SimulationCampaign
 
 
@@ -369,8 +373,9 @@ class Analyzer:
 
     def calculate_features(self) -> dict[str, DataFrame]:
         """Run every feature config; returns name → DataFrame (with params
-        suffix when expanded). Built-in Spark-native features are addressed
-        by ``function: blueetl_spark.features.<name>``.
+        suffix when expanded). Each config resolves through
+        :meth:`_feature`; built-in Spark-native features are addressed by
+        ``function: blueetl_spark.features.<name>``.
 
         With a cache, tables it cannot serve are materialized in two
         phases. First every missing table's plan is built on the calling
@@ -390,95 +395,97 @@ class Analyzer:
         pending: dict[str, tuple[DataFrame, str]] = {}  # key → (plan, checksum)
         counts = self.neuron_classes.select("circuit_id", "neuron_class", "count")
         for cfg in expand_features_configs(self.config.get("features", [])):
-            if self._is_multi_feature(cfg):
-                self._features_multi(cfg, counts, out, pending)
-                continue
-            key = cfg.get("name", cfg["function"].rsplit(".", 1)[-1])
-            key += cfg.get("suffix", "")
-            # cache first: a hit must not pay for plan construction (which
-            # resolves report/windows and opens their inputs)
+            suffix = cfg.get("suffix", "")
+            names, build = self._feature(cfg)
             cs = checksum({"cfg": cfg}) if self._cache is not None else None
-            if self._cache is not None:
-                hit = self._cache.fetch(f"features_{key}", cs, self.simulations_filter)
-                if hit is not None:
-                    out[key] = hit
-                    pending.pop(key, None)
+            # cache first: a hit must not pay for plan construction (which
+            # resolves report/windows and opens their inputs); a config is
+            # served only when every one of its tables hits
+            if cs is not None and names is not None:
+                hits = {
+                    n + suffix: self._cache.fetch(
+                        f"features_{n}{suffix}", cs, self.simulations_filter
+                    )
+                    for n in names
+                }
+                if all(v is not None for v in hits.values()):
+                    for key, df in hits.items():
+                        out[key] = df
+                        pending.pop(key, None)
                     continue
-            self._stage(key, self._feature_plan(cfg, counts), cfg, cs, out, pending)
+            for name, df in build(*self._feature_inputs(cfg, counts)).items():
+                if cfg.get("params") and cfg.get("params_id") is not None:
+                    df = df.withColumn("params_id", F.lit(cfg["params_id"]))
+                out[name + suffix] = df
+                if cs is not None:  # a later config with the same key replaces it
+                    pending[name + suffix] = (df, cs)
         self._materialize(pending, out)
         return out
 
-    def _feature_plan(self, cfg: dict[str, Any], counts: DataFrame) -> DataFrame:
-        """The (unexecuted) DataFrame of one single-output feature config."""
+    def _feature(
+        self, cfg: dict[str, Any]
+    ) -> tuple[
+        list[str] | None,
+        Callable[[DataFrame, DataFrame, DataFrame], dict[str, DataFrame]],
+    ]:
+        """Resolve one feature config to ``(output names, build)``, where
+        ``build(report, windows, counts)`` returns the unexecuted table of
+        each output name, and the names are ``None`` when only the build
+        can tell them.
+
+        A single-output config has one name: its ``name``, or the last
+        dotted part of its function. It runs its :data:`features.BUILTINS`
+        row, or its function per group under ``apply_feature``. A config
+        is multi-output if it says so (reference ``type: multi``) or its
+        function declares a ``spark_builder`` (the ``blueetl_spark.compat``
+        shims, including ones the reference types as "single", whose
+        builder still returns a named output dict). The builder then
+        contributes whole-table DataFrame plans built from the verified
+        native operators, with no per-group Python at all. Anything else
+        runs through the generic ``apply_feature_multi`` Arrow seam with
+        per-output DDL schemas (``cfg["schemas"]`` or the function's
+        ``output_schemas``). Reference-shaped functions also get the
+        :meth:`_compat_repo` stand-in.
+        """
         from blueetl_spark.operators import features as feat
 
-        fname = cfg["function"]
-        params = cfg.get("params", {})
-        report, windows, fcounts = self._feature_inputs(cfg, counts)
-        if fname == "blueetl_spark.features.by_gid":
-            return feat.by_gid(report, windows)
-        if fname == "blueetl_spark.features.by_gid_and_trial":
-            return feat.by_gid_and_trial(report)
-        if fname == "blueetl_spark.features.by_neuron_class":
-            return feat.by_neuron_class(report, windows, fcounts)
-        if fname == "blueetl_spark.features.by_neuron_class_and_trial":
-            return feat.by_neuron_class_and_trial(report, fcounts, windows=windows)
-        if fname == "blueetl_spark.features.histogram":
-            return feat.histogram(
-                report, windows, fcounts,
-                bin_size=float(params.get("bin_size", 1.0)),
-            )
-        if fname == "blueetl_spark.features.isi_stats":
-            return feat.isi_stats(report)
-        if fname == "blueetl_spark.features.latency":
-            return feat.latency(report, windows)
-        if fname == "blueetl_spark.features.sessionize":
-            from blueetl_spark.operators import timeseries as ts
-
-            return ts.sessionize(
-                report,
-                gap=float(params["gap"]),
-                by=params.get("by", ["simulation_id", "window", "gid"]),
-            )
-        if fname == "blueetl_spark.features.quantiles":
-            from blueetl_spark.operators import timeseries as ts
-
-            return ts.group_quantiles(
-                report,
-                params.get("value_col", "time"),
-                params.get("by", ["simulation_id", "window", "neuron_class"]),
-                probs=tuple(params.get("probs", (0.5, 0.9, 0.99))),
-                exact=bool(params.get("exact", True)),
-            )
-        # registry lookup → applyInPandas UDTF path (§2.9);
-        # reference-shaped fns additionally get the repo shim
+        fname, params = cfg["function"], cfg.get("params", {})
+        multi = cfg.get("type") == "multi"
+        name = cfg.get("name", fname.rsplit(".", 1)[-1])
+        builtin = None if multi else feat.BUILTINS.get(fname)
+        if builtin is not None:
+            return [name], lambda r, w, c: {name: builtin(r, w, c, params)}
         fn_ = feat.get_feature(fname)
-        return feat.apply_feature(
-            report,
-            cfg.get("groupby", feat.GROUP_KEYS),
-            fn_,
-            cfg["schema"],
-            params=params,
-            repo=self._compat_repo() if feat._is_reference_shaped(fn_) else None,
-        )
+        builder = getattr(fn_, "spark_builder", None)
+        groupby = cfg.get("groupby", feat.GROUP_KEYS)
 
-    def _stage(
-        self,
-        key: str,
-        df: DataFrame,
-        cfg: dict[str, Any],
-        cs: str | None,
-        out: dict[str, DataFrame],
-        pending: dict[str, tuple[DataFrame, str]],
-    ) -> None:
-        """Record a computed feature table: returned as is without a cache,
-        else queued for :meth:`_materialize` (a later config with the same
-        key replaces it)."""
-        if cfg.get("params") and cfg.get("params_id") is not None:
-            df = df.withColumn("params_id", F.lit(cfg["params_id"]))
-        out[key] = df
-        if self._cache is not None:
-            pending[key] = (df, cs)
+        def repo():
+            return self._compat_repo() if feat._is_reference_shaped(fn_) else None
+
+        if not multi and builder is None:
+            return [name], lambda r, w, c: {
+                name: feat.apply_feature(
+                    r, groupby, fn_, cfg["schema"], params=params, repo=repo()
+                )
+            }
+        schemas = cfg.get("schemas")
+        if schemas is None:
+            osch = getattr(fn_, "output_schemas", None)
+            schemas = osch(params) if callable(osch) else osch
+        if builder is not None:
+            return (
+                list(schemas) if schemas else None,
+                lambda r, w, c: builder(r, w, c, params),
+            )
+        if not schemas:
+            raise ValueError(
+                f"multi feature {fname!r} needs per-output schemas: pass "
+                "cfg['schemas'] = {output_name: ddl} or define "
+                "fn.output_schemas"
+            )
+        return list(schemas), lambda r, w, c: feat.apply_feature_multi(
+            r, groupby, fn_, schemas, params=params, repo=repo()
+        )
 
     def _materialize(
         self,
@@ -507,30 +514,10 @@ class Analyzer:
                 raise err
             out[key] = fut.result()
 
-    # -- multi-output (reference `type: multi`) features ---------------------
-    @staticmethod
-    def _is_multi_feature(cfg: dict[str, Any]) -> bool:
-        """A config is multi-output if it says so (reference ``type:
-        multi``) or its resolved function declares a ``spark_builder``
-        (the ``blueetl_spark.compat`` shims — including ones the
-        reference types as "single", whose builder still returns a named
-        output dict)."""
-        if cfg.get("type") == "multi":
-            return True
-        fname = cfg.get("function", "")
-        if "." not in fname or fname.startswith("blueetl_spark.features."):
-            return False
-        from blueetl_spark.operators import features as feat
-
-        try:
-            return hasattr(feat.get_feature(fname), "spark_builder")
-        except KeyError:
-            return False
-
     def _compat_repo(self):
         """Config-sized reference-``repo`` stand-in for feature functions
         with the reference calling convention; built once per analyzer
-        from the broadcast-sized windows / class-count tables."""
+        from the driver-resident windows / class-count tables."""
         if getattr(self, "_compat_repo_cache", None) is None:
             from blueetl_spark.compat import CompatRepo
 
@@ -539,72 +526,6 @@ class Analyzer:
                 self.neuron_classes.select("circuit_id", "neuron_class", "count"),
             )
         return self._compat_repo_cache
-
-    def _features_multi(
-        self,
-        cfg: dict[str, Any],
-        counts: DataFrame,
-        out: dict[str, DataFrame],
-        pending: dict[str, tuple[DataFrame, str]],
-    ) -> None:
-        """One multi-output feature config → one output table per name.
-
-        Spark-first dispatch: a function carrying a ``spark_builder``
-        (every ``blueetl_spark.compat`` shim) contributes whole-table
-        DataFrame plans built from the verified native operators — no
-        per-group Python at all. Anything else runs through the generic
-        ``apply_feature_multi`` Arrow seam with per-output DDL schemas
-        (``cfg["schemas"]`` or the function's ``output_schemas``).
-        """
-        from blueetl_spark.operators import features as feat
-
-        fname = cfg["function"]
-        suffix = cfg.get("suffix", "")
-        params = cfg.get("params", {})
-        fn_ = feat.get_feature(fname)
-        builder = getattr(fn_, "spark_builder", None)
-        schemas = cfg.get("schemas")
-        if schemas is None:
-            osch = getattr(fn_, "output_schemas", None)
-            schemas = osch(params) if callable(osch) else osch
-        if builder is None and not schemas:
-            raise ValueError(
-                f"multi feature {fname!r} needs per-output schemas: pass "
-                "cfg['schemas'] = {output_name: ddl} or define "
-                "fn.output_schemas"
-            )
-        cs = checksum({"cfg": cfg}) if self._cache is not None else None
-        names = list(schemas) if schemas else None
-        if self._cache is not None and names is not None:
-            hits = {
-                n: self._cache.fetch(
-                    f"features_{n}{suffix}", cs, self.simulations_filter
-                )
-                for n in names
-            }
-            if all(v is not None for v in hits.values()):
-                for n, v in hits.items():
-                    out[f"{n}{suffix}"] = v
-                    pending.pop(f"{n}{suffix}", None)
-                return
-        report, windows, counts = self._feature_inputs(cfg, counts)
-        if builder is not None:
-            produced = builder(report, windows, counts, params)
-        else:
-            produced = feat.apply_feature_multi(
-                report,
-                cfg.get("groupby", feat.GROUP_KEYS),
-                fn_,
-                schemas,
-                params=params,
-                repo=(
-                    self._compat_repo()
-                    if feat._is_reference_shaped(fn_)
-                    else None
-                ),
-            )
-        for oname, df in produced.items():
-            self._stage(f"{oname}{suffix}", df, cfg, cs, out, pending)
 
     # -- in-memory refiltering (reference apply_filter) ----------------------
     def apply_filter(self, simulations_filter: Query = None):

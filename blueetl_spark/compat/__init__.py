@@ -21,8 +21,8 @@ Every shim is TWO implementations with one contract:
   produces the same outputs as whole-table DataFrame plans built from
   the already-verified operators in ``operators/features.py`` /
   ``operators/signal.py`` — zero per-group Python, the 100 TB path. The
-  analysis engine prefers the builder automatically
-  (``analysis.py::Analyzer.calculate_features``).
+  analysis engine prefers the builder automatically: every feature config
+  resolves through one dispatch, ``analysis.py::Analyzer._feature``.
 
 ``tests/test_compat.py`` pins the two implementations equal on the same
 extraction, so the Spark plans are continuously verified against the
@@ -34,7 +34,7 @@ sizes). :class:`CompatRepo` reproduces exactly the accessors the shipped
 modules use (``repo.windows.get_duration/get_bounds/get_number_of_trials``,
 reference ``bnac/calculate_features.py:20,69-71``; the neuron count
 lookup behind ``len(repo.neurons.df.etl.q(...))``, ibid. :75-77) — built
-once on the driver from the broadcastable windows / neuron-class-count
+once on the driver from the driver-resident windows / neuron-class-count
 tables and shipped inside the UDF closure.
 """
 
@@ -87,35 +87,26 @@ class CompatRepo:
 
     @classmethod
     def from_frames(cls, windows_df, neuron_counts_df) -> "CompatRepo":
-        """Build from the (tiny) windows and neuron-class-count tables.
-        Collects config-sized rows only — windows × trials and classes."""
-        meta: dict[str, dict[str, Any]] = {}
-        from pyspark.sql import functions as F
+        """Build from the (tiny) windows and neuron-class-count tables on
+        the driver: the per-(simulation, window) rows of
+        ``operators.features._window_meta`` are merged by window name, so
+        driver-resident tables run no job. A window's ``n_trials`` is its
+        largest per-simulation count, which is its number of distinct
+        trial ids (trials are 0..n−1 per simulation, validated at
+        extraction)."""
+        from blueetl_spark.operators.features import _window_meta
 
-        chk = (
-            windows_df.groupBy("window")
-            .agg(
-                F.countDistinct("t_start", "t_stop", "duration").alias("nv"),
-                F.first("t_start").alias("t_start"),
-                F.first("t_stop").alias("t_stop"),
-                F.first("duration").alias("duration"),
-                F.countDistinct("trial").alias("n_trials"),
-            )
-            .collect()
-        )
-        for r in chk:
-            if r["nv"] != 1:
+        meta: dict[str, dict[str, Any]] = {}
+        for r in _window_meta(windows_df).collect():
+            bounds = {"t_start": r.t_start, "t_stop": r.t_stop, "duration": r.duration}
+            m = meta.setdefault(r.window, {**bounds, "n_trials": r.n_trials})
+            if {k: m[k] for k in bounds} != bounds:
                 raise ValueError(
-                    f"window {r['window']!r} has non-uniform bounds across "
+                    f"window {r.window!r} has non-uniform bounds across "
                     "simulations; the reference repo accessors are "
                     "name-keyed and cannot represent that"
                 )
-            meta[r["window"]] = {
-                "t_start": r["t_start"],
-                "t_stop": r["t_stop"],
-                "duration": r["duration"],
-                "n_trials": r["n_trials"],
-            }
+            m["n_trials"] = max(m["n_trials"], r.n_trials)
         counts = {
             (r["circuit_id"], r["neuron_class"]): r["count"]
             for r in neuron_counts_df.collect()

@@ -11,6 +11,12 @@ In Spark the whole fan-out is ``groupBy(keys).applyInPandas`` — the shuffle
 re-expressed as pure DataFrame aggregations so they stay inside
 whole-stage codegen instead of Python.
 
+A feature config addresses a built-in as ``function:
+blueetl_spark.features.<name>``; :data:`BUILTINS` holds one row per name,
+so a new built-in is one row there. Any other function resolves through
+:func:`get_feature` and runs per group under :func:`apply_feature` or
+:func:`apply_feature_multi`.
+
 Scale notes:
 
 - Every feature here is a map-side-combinable aggregation over the report
@@ -26,6 +32,7 @@ Scale notes:
 
 from __future__ import annotations
 
+from collections import namedtuple
 from collections.abc import Callable
 from typing import Any
 
@@ -34,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from blueetl_spark.operators import timeseries as ts
 from blueetl_spark.session import local_df
 
 GROUP_KEYS = ["simulation_id", "circuit_id", "neuron_class", "window"]
@@ -394,6 +402,37 @@ def latency(report: DataFrame, windows: DataFrame) -> DataFrame:
     )
 
 
+# The built-in features by config name, with their parameter defaults;
+# each has the ``spark_builder`` signature ``fn(report, windows,
+# neuron_counts, params) -> DataFrame``.
+BUILTINS: dict[str, Callable[[DataFrame, DataFrame, DataFrame, dict], DataFrame]] = {
+    f"blueetl_spark.features.{name}": fn
+    for name, fn in {
+        "by_gid": lambda r, w, c, p: by_gid(r, w),
+        "by_gid_and_trial": lambda r, w, c, p: by_gid_and_trial(r),
+        "by_neuron_class": lambda r, w, c, p: by_neuron_class(r, w, c),
+        "by_neuron_class_and_trial": lambda r, w, c, p: by_neuron_class_and_trial(
+            r, c, windows=w
+        ),
+        "histogram": lambda r, w, c, p: histogram(
+            r, w, c, bin_size=float(p.get("bin_size", 1.0))
+        ),
+        "isi_stats": lambda r, w, c, p: isi_stats(r),
+        "latency": lambda r, w, c, p: latency(r, w),
+        "sessionize": lambda r, w, c, p: ts.sessionize(
+            r, gap=float(p["gap"]), by=p.get("by", ["simulation_id", "window", "gid"])
+        ),
+        "quantiles": lambda r, w, c, p: ts.group_quantiles(
+            r,
+            p.get("value_col", "time"),
+            p.get("by", ["simulation_id", "window", "neuron_class"]),
+            probs=tuple(p.get("probs", (0.5, 0.9, 0.99))),
+            exact=bool(p.get("exact", True)),
+        ),
+    }.items()
+}
+
+
 # ---------------------------------------------------------------------------
 # Grouped user-function engine (the applyInPandas extension point)
 # ---------------------------------------------------------------------------
@@ -499,6 +538,30 @@ def _is_reference_shaped(fn: Callable) -> bool:
     return len(names) >= 4 and names[0] == "repo" and names[1] == "key"
 
 
+def _caller(
+    fn: str | Callable, groupby: list[str], params: dict | None, repo: Any, single: bool
+) -> Callable[[tuple, pd.DataFrame], Any]:
+    """``call(key, pdf)`` of a feature function given by name or callable:
+    ``fn(pdf, params)``, or ``fn(repo, Key(*key), pdf, params)`` for a
+    function with the reference calling convention, whose ``key`` is a
+    named tuple over ``groupby``. With ``single``, a reference-shaped
+    function's dict of scalars (the reference's "single" type) becomes a
+    one-row frame."""
+    fn = get_feature(fn) if isinstance(fn, str) else fn
+    params = params or {}
+    if not _is_reference_shaped(fn):
+        return lambda key, pdf: fn(pdf, params)
+    Key = namedtuple("Key", groupby)
+
+    def call(key: tuple, pdf: pd.DataFrame) -> Any:
+        out = fn(repo, Key(*key), pdf, params)
+        if single and isinstance(out, dict):
+            return pd.DataFrame({k: [v] for k, v in out.items()})
+        return out
+
+    return call
+
+
 def apply_feature(
     df: DataFrame,
     groupby: list[str],
@@ -519,29 +582,16 @@ def apply_feature(
     config-sized :class:`blueetl_spark.compat.CompatRepo`, shipped in the
     task closure) and a named-tuple ``key``.
     """
-    from collections import namedtuple
-
-    fn_ = get_feature(fn) if isinstance(fn, str) else fn
-    params = params or {}
-    ref_shaped = _is_reference_shaped(fn_)
-    Key = namedtuple("Key", groupby)
-
+    call = _caller(fn, groupby, params, repo, single=True)
     # Parse output column names with Spark's own DDL parser — a naive
     # split(",") breaks on any type containing a comma (map<string,double>,
     # decimal(10,2), struct<...>).
-    from pyspark.sql import types as T
-
     out_cols = (
         T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
     ).fieldNames()
 
     def runner(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        if ref_shaped:
-            out = fn_(repo, Key(*key), pdf, params)
-            if isinstance(out, dict):  # reference "single": dict of scalars
-                out = pd.DataFrame({k: [v] for k, v in out.items()})
-        else:
-            out = fn_(pdf, params)
+        out = call(key, pdf)
         for col, val in zip(groupby, key):
             if col not in out.columns:
                 out.insert(0, col, val)
@@ -582,14 +632,8 @@ def apply_feature_multi(
     """
     import json as _json
     import math
-    from collections import namedtuple
 
-    from pyspark.sql import types as T
-
-    fn_ = get_feature(fn) if isinstance(fn, str) else fn
-    params = params or {}
-    ref_shaped = _is_reference_shaped(fn_)
-    Key = namedtuple("Key", groupby)
+    call = _caller(fn, groupby, params, repo, single=False)
     out_names = list(schemas)
 
     key_fields = [f for f in df.schema.fields if f.name in set(groupby)]
@@ -620,14 +664,10 @@ def apply_feature_multi(
         return v
 
     def runner(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        out = (
-            fn_(repo, Key(*key), pdf, params)
-            if ref_shaped
-            else fn_(pdf, params)
-        )
+        out = call(key, pdf)
         if not isinstance(out, dict):
             raise TypeError(
-                f"multi feature {getattr(fn_, '__name__', fn_)!r} must return "
+                f"multi feature {getattr(fn, '__name__', fn)!r} must return "
                 f"dict[str, DataFrame], got {type(out).__name__}"
             )
         rows = []

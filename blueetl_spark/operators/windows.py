@@ -147,8 +147,7 @@ def validate_windows(windows: DataFrame) -> None:
     The rows are checked on the driver: the table is config-sized, and
     collecting a driver-resident one runs no job. Raises
     :class:`blueetl_spark.schemas.SchemaError` naming the offending
-    windows. (Canonical implementation — ``schemas.validate_windows``
-    delegates here.)
+    windows.
     """
     groups: dict[tuple, list] = {}
     for r in windows.select(

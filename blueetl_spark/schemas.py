@@ -141,17 +141,6 @@ def ensure_schema(
     return df.select(cols)
 
 
-def validate_windows(windows: DataFrame) -> None:
-    """Semantic checks on the windows table (A5/A6) — delegates to the
-    canonical implementation in
-    :func:`blueetl_spark.operators.windows.validate_windows`, which checks
-    the collected rows on the driver (no job for a driver-resident table;
-    late import: operators.windows imports this module at load time)."""
-    from blueetl_spark.operators.windows import validate_windows as _validate
-
-    _validate(windows)
-
-
 def require_integral(df: DataFrame, *cols: str, op: str) -> None:
     """Raise when any named column is fractional (float/double, or
     decimal with a nonzero scale). The engine-exact estimators (cuped,

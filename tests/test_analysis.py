@@ -18,6 +18,7 @@ from blueetl_spark.analysis import (
     run_from_config,
 )
 from blueetl_spark.operators import features as feat
+from blueetl_spark.operators import timeseries as ts
 
 CONFIG = {
     "version": 4,
@@ -623,3 +624,62 @@ def test_degenerate_campaigns_match_uncached(spark, data, tmp_path, case):
     _assert_same_tables(
         tables(cache_path=tmp_path / "c", readonly_cache=True), uncached
     )
+
+
+# Each built-in's direct operator call with the defaults of its
+# ``features.BUILTINS`` row (sessionize has no default gap: the configs
+# below pass ``gap: 5.0``).
+DIRECT_CALLS = {
+    "by_gid": lambda r, w, c: feat.by_gid(r, w),
+    "by_gid_and_trial": lambda r, w, c: feat.by_gid_and_trial(r),
+    "by_neuron_class": lambda r, w, c: feat.by_neuron_class(r, w, c),
+    "by_neuron_class_and_trial": (
+        lambda r, w, c: feat.by_neuron_class_and_trial(r, c, windows=w)
+    ),
+    "histogram": lambda r, w, c: feat.histogram(r, w, c, bin_size=1.0),
+    "isi_stats": lambda r, w, c: feat.isi_stats(r),
+    "latency": lambda r, w, c: feat.latency(r, w),
+    "sessionize": lambda r, w, c: ts.sessionize(
+        r, gap=5.0, by=["simulation_id", "window", "gid"]
+    ),
+    "quantiles": lambda r, w, c: ts.group_quantiles(
+        r, "time", ["simulation_id", "window", "neuron_class"],
+        probs=(0.5, 0.9, 0.99), exact=True,
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def builtin_tables(spark, data, tmp_path_factory):
+    """(uncached, cold cached, direct) tables of every built-in, each
+    addressed by config with its default parameters."""
+    nodes, events = data
+    cfg = _with_features([
+        {"function": f, **({"params": {"gap": 5.0}} if f.endswith("sessionize") else {})}
+        for f in feat.BUILTINS
+    ])
+    a = MultiAnalyzer(spark, cfg, nodes, events).spikes
+    uncached = a.calculate_features()
+    cached = MultiAnalyzer(
+        spark, cfg, nodes, events, cache_path=tmp_path_factory.mktemp("builtins")
+    ).spikes.calculate_features()
+    counts = a.neuron_classes.select("circuit_id", "neuron_class", "count")
+    direct = {n: call(a.report, a.windows, counts) for n, call in DIRECT_CALLS.items()}
+    return uncached, cached, direct
+
+
+@pytest.mark.parametrize("function", sorted(feat.BUILTINS))
+def test_builtin_config_path_equals_direct_call(builtin_tables, function):
+    uncached, cached, direct = builtin_tables
+    name = function.rsplit(".", 1)[-1]
+    assert name in DIRECT_CALLS and len(DIRECT_CALLS) == len(feat.BUILTINS)
+    _assert_same_tables({name: uncached[name]}, {name: direct[name]})
+    _assert_same_tables({name: cached[name]}, {name: direct[name]})
+
+
+def test_unknown_builtin_raises_key_error_naming_it(spark, data):
+    nodes, events = data
+    cfg = _with_features([{"function": "blueetl_spark.features.nope"}])
+    a = MultiAnalyzer(spark, cfg, nodes, events).spikes
+    with pytest.raises(KeyError, match="blueetl_spark.features.nope"):
+        a.calculate_features()

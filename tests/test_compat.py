@@ -211,6 +211,49 @@ def test_bluecv_neuron_class_parity(analyzer):
          float_rtol=1e-7)
 
 
+def test_compat_repo_of_a_cached_analyzer_runs_no_job(
+    spark, data, analyzer, tmp_path, count_jobs
+):
+    """The repo stand-in is built on the driver from the driver-resident
+    tables a cache serves, and carries the per-window meta of a Spark
+    aggregation of the windows table."""
+    from pyspark.sql import functions as F
+
+    nodes, events = data
+    cached = run_from_config(
+        spark, CONFIG, nodes, events, cache_path=tmp_path / "c", calculate=False
+    ).spikes
+    repo, jobs = count_jobs(cached._compat_repo)
+    assert jobs == 0
+    agg = analyzer.windows.groupBy("window").agg(
+        *[F.first(c).alias(c) for c in ("t_start", "t_stop", "duration")],
+        F.countDistinct("trial").alias("n_trials"),
+    )
+    expected = {r.window: r.asDict() for r in agg.collect()}
+    for m in expected.values():
+        del m["window"]
+    assert repo.windows._meta == expected == analyzer._compat_repo().windows._meta
+    assert repo._counts == analyzer._compat_repo()._counts
+
+
+def test_compat_repo_rejects_bounds_that_differ_across_simulations(spark):
+    from blueetl_spark.compat import CompatRepo
+    from blueetl_spark.operators.windows import windows_table
+
+    # (simulation_id, circuit_id, window, trial, offset, t_start, t_stop,
+    #  t_step, duration, window_type): w1 stops at 50 in one simulation
+    # and at 60 in the other
+    windows = windows_table(spark, [
+        (0, 0, "w1", 0, 0.0, 0.0, 50.0, 0.0, 50.0, None),
+        (1, 0, "w1", 0, 0.0, 0.0, 60.0, 0.0, 60.0, None),
+    ])
+    counts = spark.createDataFrame(
+        [(0, "EXC", 3)], "circuit_id smallint, neuron_class string, count long"
+    )
+    with pytest.raises(ValueError, match="'w1' has non-uniform bounds"):
+        CompatRepo.from_frames(windows, counts)
+
+
 def test_soma_parity(spark):
     from blueetl_spark.compat.soma import calculate_features as SF
     from blueetl_spark.operators import features as feat

@@ -11,8 +11,8 @@ from blueetl_spark.operators.windows import (
     materialize_windows,
     slice_events,
     time_bounds_filter,
+    validate_windows,
 )
-from blueetl_spark.schemas import validate_windows
 
 WINDOWS_CONFIG = {
     "w1": {"bounds": [20.0, 90.0], "window_type": "spontaneous"},
