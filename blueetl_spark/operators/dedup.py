@@ -27,6 +27,7 @@ from blueetl_spark.operators.text import (
     shingles,
     winnowing_fingerprints,
 )
+from blueetl_spark.plans import atomic
 
 
 def dedup_exact(
@@ -1237,17 +1238,6 @@ def shared_passage_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _fs_exists(spark, path: str) -> bool:
-    """Existence check through Hadoop's FileSystem API — correct on every
-    filesystem Spark can write to (hdfs://, s3a://, file:...), where a
-    driver-local ``pathlib.Path.exists()`` is silently always-False and
-    would make incremental dedup treat ALL history as absent."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(hconf).exists(p)
-
-
 def incremental_exact(
     new_docs: DataFrame,
     index_path: str,
@@ -1269,15 +1259,20 @@ def incremental_exact(
     grows as one digest row per distinct document ever seen (16 bytes +
     overhead per billion-doc corpus ≈ tens of GB — a normal shuffle).
     Appends are new files only (no rewrite), so the index is also safe
-    to write from exactly-once batch jobs; compact it periodically with
-    :func:`blueetl_spark.plans.layout.compact`. For heavy daily traffic
+    to write from exactly-once batch jobs. To compact it, rewrite it
+    into a staging dir with :func:`blueetl_spark.plans.layout.compact`
+    (which refuses an in-place rewrite) and publish that with
+    :func:`blueetl_spark.plans.atomic.swap_dir`. A swap or purge
+    interrupted mid-publish is repaired before the index is read (the
+    recover-first rule of ``plans/atomic.py``). For heavy daily traffic
     store it bucketed by digest (``bucketBy``) to make the anti-join
     co-located.
     """
     spark = new_docs.sparkSession
+    atomic.recover_dir(spark, index_path)
     fp = fingerprint(new_docs, text_col, id_col)
     keep = fp.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
-    if _fs_exists(spark, index_path):
+    if atomic.fs_exists(spark, index_path):
         seen = spark.read.parquet(index_path).select("fingerprint")
         keep = keep.join(seen, "fingerprint", "left_anti")
     # Eager snapshot BEFORE the index append. Two reasons: (1) the
@@ -1538,37 +1533,31 @@ class _ParquetMinhashStore:
 
     def exists(self) -> bool:
         self._recover()
-        return _fs_exists(self.spark, self.bucket_dir)
+        return atomic.fs_exists(self.spark, self.bucket_dir)
 
     def _recover(self) -> None:
         """Repair a compaction interrupted mid-swap so the index is always
         readable in either the old or the new state, never neither
         (:func:`blueetl_spark.plans.atomic.recover_dir`; the tombstone dir
         is only deleted after EVERY swap succeeded, so a restored old
-        state still reads correctly through ``_minus_ts``)."""
-        from blueetl_spark.plans.atomic import recover_dir
-
+        state still reads correctly through the tombstone anti-join)."""
         for cur in (self.sig_dir, self.bucket_dir):
-            recover_dir(self.spark, cur)
+            atomic.recover_dir(self.spark, cur)
 
-    def _minus_ts(self, df: DataFrame) -> DataFrame:
-        if not _fs_exists(self.spark, self.ts_dir):
-            return df
-        return df.join(
-            self.spark.read.parquet(self.ts_dir).select(self.id_col),
-            self.id_col,
-            "left_anti",
+    def _read(self, data_dir: str) -> DataFrame:
+        self._recover()
+        return atomic.without_tombstones(
+            self.spark.read.parquet(data_dir), self.ts_dir, self.id_col
         )
 
     def read_buckets(self) -> DataFrame:
-        self._recover()
-        return self._minus_ts(self.spark.read.parquet(self.bucket_dir))
+        return self._read(self.bucket_dir)
 
     def read_signatures(self) -> DataFrame:
-        self._recover()
-        return self._minus_ts(self.spark.read.parquet(self.sig_dir))
+        return self._read(self.sig_dir)
 
     def append(self, sig: DataFrame, banded: DataFrame) -> None:
+        self._recover()
         sig.write.mode("append").parquet(self.sig_dir)
         banded.write.mode("append").parquet(self.bucket_dir)
 
@@ -1576,36 +1565,26 @@ class _ParquetMinhashStore:
         ids.write.mode("append").parquet(self.ts_dir)
 
     def compact(self) -> dict[str, int]:
-        from blueetl_spark.plans.atomic import swap_dir
-
         self._recover()
-
-        def _swap(cur: str, tmp: str) -> None:
-            swap_dir(self.spark, cur, tmp)
-
+        has_ts = atomic.fs_exists(self.spark, self.ts_dir)
         counts: dict[str, int] = {}
-        has_ts = _fs_exists(self.spark, self.ts_dir)
         for name, cur in (
             ("signatures", self.sig_dir),
             ("buckets", self.bucket_dir),
         ):
-            if not _fs_exists(self.spark, cur):
+            if not atomic.fs_exists(self.spark, cur):
                 counts[name] = 0
                 continue
-            tmp = f"{self.path}/.compact-{name}.parquet"
-            # dropDuplicates(): an at-least-once replay appends full-row
+            # unique=None, full-row: an at-least-once replay appends
             # identical signature/bucket rows for the same id — matching
             # stays correct meanwhile (candidates are distinct pairs),
-            # but compaction is where they fold out. Always rewrite:
-            # that is what a compaction is.
-            kept = self._minus_ts(self.spark.read.parquet(cur)).dropDuplicates()
-            kept.write.mode("overwrite").parquet(tmp)
-            counts[name] = self.spark.read.parquet(tmp).count()
-            _swap(cur, tmp)
+            # but compaction is where they fold out
+            counts[name] = atomic.compact_dir(
+                self.spark, cur, self.ts_dir, self.id_col, None,
+                lambda df, dest: df.write.mode("overwrite").parquet(dest),
+            )
         if has_ts:
-            jvm = self.spark._jvm
-            p = jvm.org.apache.hadoop.fs.Path(self.ts_dir)
-            p.getFileSystem(self.spark._jsc.hadoopConfiguration()).delete(p, True)
+            atomic.delete_dir(self.spark, self.ts_dir)
         return counts
 
 
@@ -1771,13 +1750,17 @@ def compact_minhash_index(
     One anti-join scan of the (text-free) index per table — the
     periodic-maintenance job, NOT the per-request path.
 
-    Parquet layout publishes with the cache's swap (``plans/cache.py``):
-    temp write → rename current to backup → rename temp in → delete
-    backup; renames are atomic per step, so a crash leaves a
-    recoverable backup, never a half-written current. The bucketed
-    layout rewrites into a ``__compact`` table (same bucket spec) and
-    swaps via DROP + RENAME — a crash between the two leaves the
-    ``__compact`` table intact for manual recovery. Single-maintainer
+    The parquet layout compacts each table with
+    :func:`blueetl_spark.plans.atomic.compact_dir` and publishes with
+    :func:`blueetl_spark.plans.atomic.swap_dir`: temp write → rename
+    current to backup → rename temp in → delete backup; renames are
+    atomic per step, so a crash leaves a recoverable backup, never a
+    half-written current. The bucketed layout rewrites into a
+    ``__compact`` table (same bucket spec) and swaps via DROP + RENAME —
+    a crash between the two leaves the ``__compact`` table intact, and
+    the next open of the index promotes it. Either layout repairs an
+    interrupted swap on its next read, append or compaction, and drops
+    the tombstones only after every table is swapped. Single-maintainer
     semantics either way (same contract as the index's appends).
     Returns per-table row counts after compaction.
     """
@@ -1795,31 +1778,21 @@ def purge_exact_index(
     re-crawl). The exact index stores ONLY 16-byte digests, so the
     purge must be given the documents (or at least their text) to know
     which digests to drop; it rewrites the digest table minus those
-    fingerprints with the same temp-write → backup-rename → publish
-    swap as :func:`compact_minhash_index`. Cost is one anti-join scan
+    fingerprints and publishes with the same temp-write → backup-rename
+    → publish swap (:func:`blueetl_spark.plans.atomic.swap_dir`) as
+    :func:`compact_minhash_index`. Cost is one anti-join scan
     of the digest table (digests, never text) — run it batched, not
     per request; until it runs, the content stays deduped-out, which is
     the safe failure direction for a dedup index. Returns the digest
     count after the rewrite."""
     spark = remove_docs.sparkSession
-    if not _fs_exists(spark, index_path):
+    atomic.recover_dir(spark, index_path)
+    if not atomic.fs_exists(spark, index_path):
         return 0
     gone = fingerprint(remove_docs, text_col, id_col).select("fingerprint").distinct()
     kept = spark.read.parquet(index_path).join(gone, "fingerprint", "left_anti")
     tmp = f"{index_path}.compact-tmp"
     kept.write.mode("overwrite").parquet(tmp)
     n = spark.read.parquet(tmp).count()
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(index_path).getFileSystem(hconf)
-    bak = P(index_path + ".old")
-    if fs.exists(bak):
-        fs.delete(bak, True)
-    if not fs.rename(P(index_path), bak):
-        raise IOError(f"purge: rename {index_path} -> .old failed")
-    if not fs.rename(P(tmp), P(index_path)):
-        raise IOError(f"purge: rename {tmp} -> {index_path} failed")
-    fs.delete(bak, True)
+    atomic.swap_dir(spark, index_path, tmp)
     return n

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from blueetl_spark.operators.text import tokens
+from blueetl_spark.plans import atomic
 
 
 def _postings(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -94,6 +95,7 @@ def append_inverted_index(
     layout.  Returns the number of posting rows appended."""
     from pyspark.sql import Observation
 
+    atomic.recover_dir(new_docs.sparkSession, f"{path}/postings.parquet")
     # Pin the batch's postings ONCE (eager): both the observed append and
     # the (token, df, tf) delta derive from this single materialized frame,
     # so a non-deterministic source (sample/limit) cannot make the delta
@@ -133,27 +135,13 @@ def compact_inverted_index(spark: SparkSession, path: str, n_files: int = 32) ->
     aid only (anchor choice), never a correctness input, since
     :func:`phrase_search` counts from postings.  Returns the surviving
     posting-row count."""
-    from pyspark.sql import Observation
-
-    from blueetl_spark.plans.atomic import fs_exists, recover_dir, swap_dir
-
     post_dir = f"{path}/postings.parquet"
     ts_dir = f"{path}/tombstones.parquet"
-    recover_dir(spark, post_dir)
-    kept = spark.read.parquet(post_dir)
-    has_ts = fs_exists(spark, ts_dir)
-    if has_ts:
-        kept = kept.join(
-            spark.read.parquet(ts_dir).select("doc_id"), "doc_id", "left_anti"
-        )
-    kept = kept.dropDuplicates(["doc_id", "pos"])
-    obs = Observation("inv_compact")
-    tmp = f"{path}/.compact-postings.parquet"
-    _write_postings(
-        kept.observe(obs, F.count(F.lit(1)).alias("n")), tmp, n_files, "overwrite"
+    has_ts = atomic.fs_exists(spark, ts_dir)
+    n = atomic.compact_dir(
+        spark, post_dir, ts_dir, "doc_id", ["doc_id", "pos"],
+        lambda df, dest: _write_postings(df, dest, n_files, "overwrite"),
     )
-    n = obs.get["n"]
-    swap_dir(spark, post_dir, tmp)
     dfreq = (
         spark.read.parquet(post_dir)
         .groupBy("token")
@@ -161,9 +149,7 @@ def compact_inverted_index(spark: SparkSession, path: str, n_files: int = 32) ->
     )
     dfreq.repartition(1).write.mode("overwrite").parquet(f"{path}/_df.parquet")
     if has_ts:
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(ts_dir)
-        p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
+        atomic.delete_dir(spark, ts_dir)
     return n
 
 
@@ -182,12 +168,10 @@ def phrase_search(
     ``(doc_id, anchor_pos)`` — a phrase occurrence at anchor position
     ``p`` requires token ``j`` at ``p + (j - anchor_offset)``.
     """
-    from blueetl_spark.plans.atomic import fs_exists, recover_dir
-
     p_toks = phrase.split()
     if not p_toks:
         raise ValueError("empty phrase")
-    recover_dir(spark, f"{path}/postings.parquet")
+    atomic.recover_dir(spark, f"{path}/postings.parquet")
     post = spark.read.parquet(f"{path}/postings.parquet")
     dfreq = spark.read.parquet(f"{path}/_df.parquet")
     # the side table may hold per-batch deltas (append_inverted_index);
@@ -211,15 +195,13 @@ def phrase_search(
     anchor = min(known, key=lambda j: freqs[p_toks[j]]) if known else 0
     # replayed at-least-once appends duplicate posting rows; fold them
     # out on the natural key before any adjacency join double-counts
-    probe = post.filter(F.col("token").isin(list(set(p_toks)))).dropDuplicates(
-        ["doc_id", "pos"]
+    probe = atomic.without_tombstones(
+        post.filter(F.col("token").isin(list(set(p_toks)))).dropDuplicates(
+            ["doc_id", "pos"]
+        ),
+        f"{path}/tombstones.parquet",
+        "doc_id",
     )
-    if fs_exists(spark, f"{path}/tombstones.parquet"):
-        probe = probe.join(
-            spark.read.parquet(f"{path}/tombstones.parquet").select("doc_id"),
-            "doc_id",
-            "left_anti",
-        )
     cur = (
         probe.filter(F.col("token") == p_toks[anchor])
         .select("doc_id", (F.col("pos") - anchor).alias("__start"))

@@ -40,6 +40,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from blueetl_spark.plans import atomic
 from blueetl_spark.session import local_df
 
 
@@ -527,11 +528,10 @@ def append_ivf_pq_index(
     from pyspark.sql import Observation
 
     from blueetl_spark.operators.similarity import assign_cells
-    from blueetl_spark.plans.atomic import recover_dir
 
     spark = new_vectors.sparkSession
     codes_dir = f"{index_path}/codes.parquet"
-    recover_dir(spark, codes_dir)
+    atomic.recover_dir(spark, codes_dir)
     if new_vectors.isEmpty():
         # zero-row no-op: the Observation metrics row is absent on an
         # empty mapInPandas plan (obs.get dies in toPyRow), and a
@@ -578,14 +578,9 @@ def compact_ivf_pq_index(spark, index_path: str) -> int:
     """Fold tombstones into the codes and deduplicate replayed appends
     (one row per ``neighbor_id``) via the shared crash-safe staged swap.
     Returns the surviving vector count."""
-    from blueetl_spark.operators.similarity import _compact_cell_partitioned
+    from blueetl_spark.operators.similarity import _compact_cells
 
-    return _compact_cell_partitioned(
-        spark,
-        f"{index_path}/codes.parquet",
-        f"{index_path}/tombstones.parquet",
-        f"{index_path}/.compact-codes.parquet",
-    )
+    return _compact_cells(spark, index_path, "codes.parquet")
 
 
 def search_ivf_pq_index(
@@ -628,10 +623,9 @@ def search_ivf_pq_index(
     from pathlib import Path
 
     from blueetl_spark.operators.similarity import assign_cells
-    from blueetl_spark.plans.atomic import fs_exists, recover_dir
 
     base = Path(index_path)
-    recover_dir(spark, str(base / "codes.parquet"))
+    atomic.recover_dir(spark, str(base / "codes.parquet"))
     cents, cbs_np = _load_ivf_pq_codebooks(spark, index_path)
     cent_np = np.asarray(cents)
     n_sub = len(cbs_np)
@@ -678,16 +672,13 @@ def search_ivf_pq_index(
         )
         cell_plan[cell] = (rows, lut)
 
-    codes_df = spark.read.parquet(str(base / "codes.parquet")).filter(
-        F.col("cell").isin([int(c) for c in probed])
+    codes_df = atomic.without_tombstones(
+        spark.read.parquet(str(base / "codes.parquet")).filter(
+            F.col("cell").isin([int(c) for c in probed])
+        ),
+        str(base / "tombstones.parquet"),
+        "neighbor_id",
     )
-    ts_dir = str(base / "tombstones.parquet")
-    if fs_exists(spark, ts_dir):
-        codes_df = codes_df.join(
-            spark.read.parquet(ts_dir).select("neighbor_id"),
-            "neighbor_id",
-            "left_anti",
-        )
     if exclude is not None:
         codes_df = codes_df.join(
             exclude.select(F.col(exclude.columns[0]).alias("neighbor_id")),

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from blueetl_spark.plans import atomic
 from blueetl_spark.session import local_df
 
 
@@ -637,10 +638,8 @@ def search_ivf_index(
     excludes its own batch's prior appends this way). Output contract
     matches :func:`knn_ivf`: (query_id, neighbor_id, cosine, rank).
     """
-    from blueetl_spark.plans.atomic import fs_exists, recover_dir
-
     assign_dir = f"{index_path}/assignments.parquet"
-    recover_dir(spark, assign_dir)
+    atomic.recover_dir(spark, assign_dir)
     cb_rows = (
         spark.read.parquet(f"{index_path}/codebook.parquet")
         .orderBy("centroid_id")
@@ -664,14 +663,11 @@ def search_ivf_index(
         .localCheckpoint(eager=True)
     )
     probed = sorted({r.cell for r in q.select("cell").distinct().collect()})
-    c = spark.read.parquet(assign_dir).filter(F.col("cell").isin(probed))
-    ts_dir = f"{index_path}/tombstones.parquet"
-    if fs_exists(spark, ts_dir):
-        c = c.join(
-            spark.read.parquet(ts_dir).select("neighbor_id"),
-            "neighbor_id",
-            "left_anti",
-        )
+    c = atomic.without_tombstones(
+        spark.read.parquet(assign_dir).filter(F.col("cell").isin(probed)),
+        f"{index_path}/tombstones.parquet",
+        "neighbor_id",
+    )
     if exclude is not None:
         c = c.join(
             exclude.select(F.col(exclude.columns[0]).alias("neighbor_id")),
@@ -721,6 +717,8 @@ def append_ivf_index(
     from pyspark.sql import Observation
 
     spark = new_vectors.sparkSession
+    assign_dir = f"{index_path}/assignments.parquet"
+    atomic.recover_dir(spark, assign_dir)
     cb_rows = (
         spark.read.parquet(f"{index_path}/codebook.parquet")
         .orderBy("centroid_id")
@@ -740,7 +738,7 @@ def append_ivf_index(
     obs = Observation("ivf_append")
     assigned.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
         "append"
-    ).partitionBy("cell").parquet(f"{index_path}/assignments.parquet")
+    ).partitionBy("cell").parquet(assign_dir)
     return obs.get["n"]
 
 
@@ -755,38 +753,20 @@ def purge_ivf_index(ids: DataFrame, index_path: str, id_col: str = "vec_id") -> 
     ).parquet(f"{index_path}/tombstones.parquet")
 
 
-def _compact_cell_partitioned(spark, data_dir: str, ts_dir: str, tmp: str) -> int:
-    """Shared cell-partitioned compaction (flat IVF assignments AND
-    IVF-PQ codes): rewrite ``data_dir`` minus the tombstoned ids, one
-    row per ``neighbor_id`` (duplicate rows from replayed at-least-once
-    appends are full-row identical — frozen codebooks give the same
-    cell/payload — so any one row per id is the right survivor), via the
-    crash-safe staged swap, then drop the tombstone table. Returns the
-    surviving row count."""
-    from pyspark.sql import Observation
-
-    from blueetl_spark.plans.atomic import fs_exists, recover_dir, swap_dir
-
-    recover_dir(spark, data_dir)
-    kept = spark.read.parquet(data_dir)
-    has_ts = fs_exists(spark, ts_dir)
+def _compact_cells(spark, index_path: str, data: str) -> int:
+    """Compaction of a cell-partitioned data dir (flat IVF assignments
+    AND IVF-PQ codes): one row per ``neighbor_id`` (rows from replayed
+    at-least-once appends are full-row identical — frozen codebooks give
+    the same cell/payload — so any one row per id is the right
+    survivor), then drop the tombstones."""
+    ts_dir = f"{index_path}/tombstones.parquet"
+    has_ts = atomic.fs_exists(spark, ts_dir)
+    n = atomic.compact_dir(
+        spark, f"{index_path}/{data}", ts_dir, "neighbor_id", ["neighbor_id"],
+        lambda df, dest: df.write.mode("overwrite").partitionBy("cell").parquet(dest),
+    )
     if has_ts:
-        kept = kept.join(
-            spark.read.parquet(ts_dir).select("neighbor_id"),
-            "neighbor_id",
-            "left_anti",
-        )
-    kept = kept.dropDuplicates(["neighbor_id"])
-    obs = Observation("ivf_compact")
-    kept.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(tmp)
-    n = obs.get["n"]
-    swap_dir(spark, data_dir, tmp)
-    if has_ts:
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(ts_dir)
-        p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
+        atomic.delete_dir(spark, ts_dir)
     return n
 
 
@@ -801,12 +781,7 @@ def compact_ivf_index(spark, index_path: str) -> int:
     table. Returns the surviving vector count. The periodic-maintenance
     job, not the per-request path — it always rewrites the layout, which
     is what a compaction is."""
-    return _compact_cell_partitioned(
-        spark,
-        f"{index_path}/assignments.parquet",
-        f"{index_path}/tombstones.parquet",
-        f"{index_path}/.compact-assignments.parquet",
-    )
+    return _compact_cells(spark, index_path, "assignments.parquet")
 
 
 def ann_recall(

@@ -33,6 +33,8 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from blueetl_spark.plans.atomic import fs_path
+
 
 def _row_check(id_col: str, payload_cols: list[str]):
     """Per-row 64-bit digest: id + every payload column.
@@ -48,19 +50,12 @@ def _row_check(id_col: str, payload_cols: list[str]):
     return F.xxhash64(*cols)
 
 
-def _fs_path(spark: SparkSession, path: str):
-    """(FileSystem, Path) through Hadoop — manifest I/O must go through
-    the same filesystem layer as the data write, or any non-local target
-    (s3a://, hdfs://) dies AFTER the expensive parquet write when local
-    pathlib can't resolve the URI."""
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(path)
-    return hp.getFileSystem(spark._jsc.hadoopConfiguration()), hp
-
-
 def _write_text(spark: SparkSession, dir_path: str, name: str, text: str) -> None:
-    fs, hp = _fs_path(spark, dir_path)
-    out = fs.create(spark._jvm.org.apache.hadoop.fs.Path(hp, name), True)
+    # manifest I/O goes through the same Hadoop filesystem layer as the
+    # data write, or any non-local target (s3a://, hdfs://) dies AFTER
+    # the expensive parquet write when local pathlib can't resolve it
+    fs, p = fs_path(spark, f"{dir_path}/{name}")
+    out = fs.create(p, True)
     try:
         out.write(bytearray(text.encode("utf-8")))
     finally:
@@ -68,8 +63,8 @@ def _write_text(spark: SparkSession, dir_path: str, name: str, text: str) -> Non
 
 
 def _read_text(spark: SparkSession, dir_path: str, name: str) -> str:
-    fs, hp = _fs_path(spark, dir_path)
-    inp = fs.open(spark._jvm.org.apache.hadoop.fs.Path(hp, name))
+    fs, p = fs_path(spark, f"{dir_path}/{name}")
+    inp = fs.open(p)
     try:
         # read JVM-side: a java read(byte[]) fills the JAVA copy of the
         # buffer — py4j passes arrays by value, so a python-side loop

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from blueetl_spark.plans.atomic import fs_path
+
 MAX_KEY_BITS = 63  # signed-long key; conv(..., 2, -10) semantics
 
 
@@ -224,12 +226,8 @@ def compact(
 
     Returns {"in_files", "in_bytes", "out_files"}.
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
     def qualified(p: str):
-        hp = jvm.org.apache.hadoop.fs.Path(p)
-        fs = hp.getFileSystem(conf)
+        fs, hp = fs_path(spark, p)
         return fs.makeQualified(hp)
 
     # compare FILESYSTEM-qualified paths, not strings: 'dir' vs 'dir/'
@@ -245,8 +243,7 @@ def compact(
     def data_files(p: str) -> tuple[int, int]:
         """(count, bytes) of data files (markers like _SUCCESS excluded),
         recursing into partition directories."""
-        hpath = jvm.org.apache.hadoop.fs.Path(p)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, hpath = fs_path(spark, p)
         it = fs.listFiles(hpath, True)
         n = b = 0
         while it.hasNext():

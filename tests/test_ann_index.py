@@ -89,6 +89,20 @@ def test_compact_swap_crash_recovery(spark, index):
     assert not os.path.exists(assign + ".old")  # backup cleaned
 
 
+def test_append_after_interrupted_compaction_keeps_history(spark, index):
+    """A compaction stopped after its backup rename leaves the history in
+    ``assignments.parquet.old``. An append must restore it first: an
+    append into a fresh dir would make the next search's recovery take
+    the 10-vector dir as the new state and drop the 100-vector backup."""
+    idx, corpus = index
+    assign = f"{idx}/assignments.parquet"
+    shutil.move(assign, assign + ".old")
+    assert sim.append_ivf_index(_vectors(spark, range(1000, 1010), seed=2), idx) == 10
+    q = _vectors(spark, [9999], seed=3)
+    out = sim.search_ivf_index(spark, q, idx, k=200, n_probe=4)
+    assert out.select("neighbor_id").distinct().count() == 110
+
+
 def test_replay_duplicate_appends_fold_out(spark, index):
     """An at-least-once replay calls append_ivf_index twice for the same
     vectors (ADVICE r6): search must still return k DISTINCT neighbors

@@ -417,6 +417,28 @@ def test_purge_and_compact_minhash_index(spark, tmp_path):
     assert counts2["signatures"] == 2
 
 
+def test_compact_minhash_index_after_purging_every_id_is_empty(spark, tmp_path):
+    """Purging every id and compacting leaves a readable, empty index:
+    both counts are 0 and a probe matches nothing."""
+    from blueetl_spark.operators.dedup import (
+        compact_minhash_index,
+        incremental_minhash,
+        purge_minhash_index,
+    )
+
+    idx = str(tmp_path / "mh_all")
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog again"),
+         (2, "completely different words " * 5)],
+        "doc_id long, text string",
+    )
+    incremental_minhash(docs, idx)
+    purge_minhash_index(docs.select("doc_id"), idx)
+    assert compact_minhash_index(spark, idx) == {"signatures": 0, "buckets": 0}
+    assert spark.read.parquet(f"{idx}/signatures.parquet").count() == 0
+    assert incremental_minhash(docs, idx, update=False).count() == 0
+
+
 def test_purge_exact_index_allows_reingest(spark, tmp_path):
     """Takedown + re-crawl on the exact-dedup digest index: purged
     content's digest is rewritten out, so identical text survives the
@@ -443,6 +465,29 @@ def test_purge_exact_index_allows_reingest(spark, tmp_path):
         [(11, "beta content")], "doc_id long, text string"
     )
     assert incremental_exact(still, idx, update=False).count() == 0
+
+
+def test_exact_index_append_after_interrupted_purge_keeps_history(spark, tmp_path):
+    """A purge stopped between its two renames leaves the digest history
+    in ``{index}.old`` and no index dir. The next ingest must restore it
+    before it dedups and appends: otherwise an already indexed text
+    survives, the append starts a fresh index, and the history is lost."""
+    import shutil
+
+    from blueetl_spark.operators.dedup import incremental_exact
+
+    idx = str(tmp_path / "exact_idx")
+    b1 = spark.createDataFrame(
+        [(1, "alpha content"), (2, "beta content")], "doc_id long, text string"
+    )
+    assert incremental_exact(b1, idx).count() == 2
+    # the purge staged its rewrite and renamed the index to its backup
+    shutil.copytree(idx, idx + ".compact-tmp")
+    shutil.move(idx, idx + ".old")
+
+    resent = spark.createDataFrame([(20, "beta content")], "doc_id long, text string")
+    assert incremental_exact(resent, idx).count() == 0
+    assert spark.read.parquet(idx).count() == 2
 
 
 def test_semantic_decontaminate_methods_agree(spark, sf_dir):
@@ -703,6 +748,7 @@ def test_compaction_swap_crash_recovery(spark, tmp_path):
         incremental_minhash,
         purge_minhash_index,
     )
+    from blueetl_spark.plans import atomic
 
     def mkdocs(lo, hi):
         return spark.range(lo, hi).select(
@@ -725,7 +771,9 @@ def test_compaction_swap_crash_recovery(spark, tmp_path):
     def compacted_dir(cur):
         """What compaction would have staged: cur minus tombstones."""
         tmp = f"{idx}/.crash-stage.parquet"
-        store._minus_ts(spark.read.parquet(cur)).write.mode("overwrite").parquet(tmp)
+        atomic.without_tombstones(
+            spark.read.parquet(cur), store.ts_dir, "doc_id"
+        ).write.mode("overwrite").parquet(tmp)
         return tmp
 
     # -- crash point 1: backup rename done, publish rename NOT done --------

@@ -46,3 +46,15 @@ def test_no_unused_module_level_imports():
         and (unused := _unused_imports(p.read_text()))
     }
     assert found == {}
+
+
+def test_only_atomic_names_the_hadoop_filesystem():
+    """``plans/atomic.py`` is the package's one resolver of Hadoop
+    ``FileSystem`` paths (``atomic.fs_path``); every other module goes
+    through it."""
+    found = sorted(
+        str(p.relative_to(PACKAGE.parent))
+        for p in PACKAGE.rglob("*.py")
+        if "org.apache.hadoop.fs" in p.read_text()
+    )
+    assert found == ["blueetl_spark/plans/atomic.py"]

@@ -146,3 +146,34 @@ def test_incremental_lifecycle_append_replay_purge_compact(spark, docs, tmp_path
     assert sorted(
         map(tuple, invindex.phrase_search(spark, path, "a a").collect())
     ) == [(1, 2)]
+
+
+def test_append_after_interrupted_compaction_keeps_history(spark, tmp_path):
+    """A compaction stopped after its backup rename leaves the postings
+    in ``postings.parquet.old``. An append must restore them first: an
+    append into a fresh dir would make the next search's recovery take
+    the new batch as the live state and drop the backed-up history."""
+    import shutil
+
+    path = str(tmp_path / "crash_idx")
+    b1 = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "beta gamma delta")], "doc_id long, text string"
+    )
+    invindex.build_inverted_index(b1, path, n_files=2)
+    post = f"{path}/postings.parquet"
+    shutil.move(post, post + ".old")
+    b2 = spark.createDataFrame([(3, "epsilon zeta")], "doc_id long, text string")
+    invindex.append_inverted_index(b2, path)
+    got = invindex.phrase_search(spark, path, "beta gamma").collect()
+    assert sorted(r.doc_id for r in got) == [1, 2]
+
+
+def test_compaction_after_purging_every_doc_is_empty(spark, docs, tmp_path):
+    """Purging every document and compacting leaves a readable, empty
+    index: the count is 0 and searches return no rows."""
+    path = str(tmp_path / "purge_all_idx")
+    invindex.build_inverted_index(docs, path, n_files=2)
+    invindex.purge_inverted_index(docs.select("doc_id"), path)
+    assert invindex.compact_inverted_index(spark, path, n_files=2) == 0
+    assert spark.read.parquet(f"{path}/postings.parquet").count() == 0
+    assert invindex.phrase_search(spark, path, "quick brown").count() == 0

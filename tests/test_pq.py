@@ -245,7 +245,7 @@ def test_ivf_pq_index_lifecycle(vecs, spark, tmp_path):
 
 def test_ivf_pq_compact_swap_crash_recovery(vecs, spark, tmp_path):
     """Both swap interruption points leave the codes index searchable
-    (the flat index's crash contract, shared via _compact_cell_partitioned)."""
+    (the flat index's crash contract, shared via similarity._compact_cells)."""
     import shutil
 
     path = str(tmp_path / "ivfpq")
